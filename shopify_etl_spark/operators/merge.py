@@ -28,17 +28,6 @@ from pyspark.sql import functions as F
 from ..functions.scalars import non_empty, norm_sku
 
 
-def combine_stores(*stores: DataFrame) -> DataFrame:
-    """U1 — UNION ALL of per-store staging frames, resolved by name
-    (reference make_combined_staging_table, run_etl_with_retries.py:41-44)."""
-    if not stores:
-        raise ValueError("combine_stores needs at least one staging frame")
-    out = stores[0]
-    for df in stores[1:]:
-        out = out.unionByName(df)
-    return out
-
-
 def latest_per_key(df: DataFrame, key_cols, order_col: str, tiebreak_col) -> DataFrame:
     """W1 — latest-per-key dedup (Postgres DISTINCT ON … ORDER BY … DESC,
     reference run_logs.txt:346-361) with a pinned deterministic tie-break

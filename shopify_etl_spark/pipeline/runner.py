@@ -5,22 +5,26 @@ Spark twin of the reference's daily job (reference daily_scheduler.py:
 
 * **Phase 1** — store×entity staging tasks run concurrently via a thread
   pool (Spark's scheduler is thread-safe; concurrent jobs share the
-  executors). Each task: read raw envelope → flatten → overwrite the
-  staging table → log the watermark.
-* **Barrier** — any staging failure skips the merge phase
-  (daily_scheduler.py:168-172).
+  executors). Each task: read the raw envelope and parse it once
+  (cached) → flatten → overwrite its staging tables directly (per-run
+  scratch, guarded by the barrier) → buffer its run-log rows, with the
+  watermark observed on the first staging write (no extra job).
+* **Barrier** — the run log's buffered rows land as one file; any staging
+  failure, or a failed run-log write, skips the merge phase
+  (daily_scheduler.py:168-172). Raw files archive only after that write.
 * **Phase 2** — serial merges per entity with a 2-attempt retry
   (run_etl_with_retries.py; 'attempt 1/2' markers at run_logs.txt:239).
   Full refresh for dims, upsert for orders/inventory, delete+reload for
-  order items, keyed snapshot append.
+  order items, keyed snapshot append. Staging tables are read with the
+  schema their flatteners declare, and each merge input with more than
+  one consumer is computed once (a local checkpoint).
 
-Warehouse tables are parquet directories; merged results are staged to a
-``_tmp`` sibling and atomically swapped. The orders entity writes TWO
-tables per run (fact_orders + fact_order_items) and the reference
-commits them in one transaction (run_etl_with_retries.py:60-94), so the
-pair publishes through the manifest store in ``txn_store.py`` — one
-atomic rename covers both tables, closing SURVEY §7.4 risk 1; every
-single-table merge keeps the plain swap.
+Single-table warehouse merges are staged to a ``_tmp`` sibling and
+swapped in by ``atomic_overwrite``. The orders entity writes TWO tables
+per run (fact_orders + fact_order_items) and the reference commits them
+in one transaction (run_etl_with_retries.py:60-94), so the pair
+publishes through the manifest store in ``txn_store.py`` — one atomic
+rename covers both tables, closing SURVEY §7.4 risk 1.
 """
 
 from __future__ import annotations
@@ -28,10 +32,12 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..operators import flatten, merge
-from ..schemas import MERGE_KEYS, SCHEMA_MAP, project_declared
+from ..schemas import MERGE_KEYS, NODE_SCHEMAS, project_declared
 from ..sources import read_envelope
 from .watermark import RunLog
 
@@ -113,11 +119,16 @@ def atomic_overwrite(df: DataFrame, path: str, partition_cols=None) -> None:
     overwrite a path it is concurrently reading). Uses the Hadoop FS API
     so the swap works on any filesystem scheme.
 
-    Swap order matters: the old table is RENAMED aside (not deleted)
-    before the new one moves in, so there is no window in which a crash
-    leaves NO table — at worst ``path._old`` holds the previous version
-    for manual recovery. Rename results are checked: Hadoop signals
-    rename failure by returning false, not by raising.
+    The swap is two renames: ``path`` → ``path._old``, then ``_tmp`` →
+    ``path``. Between them the table is ABSENT. A crash there leaves the
+    previous version only in ``path._old``; the next merge reads the
+    table as missing (``_read_table`` → None), and the next call here
+    deletes ``_old`` first — for ``fact_current_inventory`` that silently
+    loses the rows of every SKU not delivered that day. Publishing the
+    warehouse through one manifest store (as ``txn_store.py`` does for
+    the orders pair; ROADMAP.md, "One manifest store") closes this
+    window. Rename results are checked: Hadoop signals rename failure by
+    returning false, not by raising.
 
     ``partition_cols`` writes the new table hive-partitioned — used by the
     one-time legacy→partitioned layout migration, where a dynamic
@@ -140,7 +151,7 @@ def atomic_overwrite(df: DataFrame, path: str, partition_cols=None) -> None:
     if had_previous and not fs.rename(target, old_path):
         raise IOError(f"atomic_overwrite: failed to move aside {path}")
     if not fs.rename(tmp_path, target):
-        # put the old table back before failing — never leave a gap
+        # put the old table back before failing
         if had_previous:
             fs.rename(old_path, target)
         raise IOError(f"atomic_overwrite: failed to install new table at {path}")
@@ -148,8 +159,13 @@ def atomic_overwrite(df: DataFrame, path: str, partition_cols=None) -> None:
         fs.delete(old_path, True)
 
 
-def _read_table(spark: SparkSession, path: str) -> DataFrame | None:
-    return spark.read.parquet(path) if table_exists(spark, path) else None
+def _read_table(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame | None:
+    """The parquet table at ``path`` (None if absent). A known ``schema``
+    skips the schema-inference job a bare read runs."""
+    if not table_exists(spark, path):
+        return None
+    reader = spark.read.schema(schema) if schema is not None else spark.read
+    return reader.parquet(path)
 
 
 def archive_raw(spark: SparkSession, src: str, archive_dir: str, store: str, entity: str) -> str | None:
@@ -248,13 +264,49 @@ def _migrate_orders_pair(spark: SparkSession, wh: str, store) -> None:
             fs.delete(p, True)
 
 
+def _staging_frames(nodes: DataFrame, store: str, entity: str) -> dict[str, DataFrame]:
+    """The staging tables one (store, entity) task writes, in write order.
+    The first has one row per node, so the task's watermark is observed
+    on its write."""
+    if entity == "customers":
+        return {"dim_customers": flatten.flatten_customers(nodes, store)}
+    if entity == "orders":
+        return {
+            "fact_orders": flatten.flatten_orders(nodes, store),
+            "fact_order_items": flatten.explode_order_items(nodes, store),
+        }
+    return {
+        "dim_products": flatten.flatten_products(nodes),
+        "dim_product_variants": flatten.explode_variants(nodes),
+        "fact_current_inventory": flatten.inventory_from_products(nodes, store),
+    }
+
+
+_STAGING_SCHEMAS: dict[str, StructType] = {}
+
+
+def staging_schema(spark: SparkSession, entity: str, table: str) -> StructType:
+    """A staging table's schema as its flattener declares it at plan time
+    (the flattener over an empty node frame — no job), so merges read
+    staging without a schema-inference job. Memoized: it depends only on
+    the code."""
+    if table not in _STAGING_SCHEMAS:
+        empty = spark.createDataFrame([], StructType([StructField("node", NODE_SCHEMAS[entity])]))
+        for t, df in _staging_frames(empty, "retail", entity).items():
+            _STAGING_SCHEMAS[t] = df.schema
+    return _STAGING_SCHEMAS[table]
+
+
 def _stage_one(spark: SparkSession, cfg: PipelineConfig, runlog: RunLog, store: str, entity: str):
-    """One staging task (reference process_entity, daily_scheduler.py:100-148)."""
+    """One staging task (reference process_entity, daily_scheduler.py:100-148).
+    Returns whether the staging tables landed; the run-log rows it buffers
+    become durable at the barrier (``run_daily``)."""
     # Each staging thread gets its own scheduler pool so concurrent jobs
     # share executors fairly (needs spark.scheduler.mode=FAIR, set in
     # session.py; a no-op under FIFO). Local properties are thread-local.
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"staging-{store}-{entity}")
     run_id = runlog.log_start(store, entity)
+    nodes = None
     try:
         key = f"{store}_{entity}"
         if cfg.bulk_transports and key in cfg.bulk_transports:
@@ -269,33 +321,224 @@ def _stage_one(spark: SparkSession, cfg: PipelineConfig, runlog: RunLog, store: 
             )
         else:
             nodes = read_envelope(spark, cfg.raw_paths[key], entity)
+        # parse once: every staging frame reads the cached nodes
+        nodes = nodes.cache()
         out_dir = f"{cfg.warehouse_dir}/staging/{store}"
+        watermark = Observation()
+        for i, (table, df) in enumerate(_staging_frames(nodes, store, entity).items()):
+            if i == 0:
+                # A1 watermark (flatten.max_updated_at) from the first
+                # write's own pass: its rows are one per node
+                df = df.observe(watermark, F.max("updated_at").alias("wm"))
+            # staging is per-run scratch: written in place, no swap. It
+            # keeps extra plumbing cols (e.g. created_at on inventory);
+            # projection to declared happens at merge time.
+            df.write.mode("overwrite").parquet(f"{out_dir}/{table}")
+        runlog.log_staging_success(run_id, store, entity, watermark.get["wm"])
+        return True
+    except Exception as e:  # noqa: BLE001
+        runlog.log_failure(run_id, store, entity, str(e))
+        return False
+    finally:
+        if nodes is not None:
+            nodes.unpersist()
+
+
+def _merge_entity(spark: SparkSession, cfg: PipelineConfig, entity: str, ingest_ts) -> None:
+    """Serial merge for one entity (reference run_entity_merge)."""
+    wh = cfg.warehouse_dir
+    stores = list(cfg.stores)
+    # Merge inputs read twice are computed once, as lazy local
+    # checkpoints: cache() would run the cached plan without AQE's
+    # partition coalescing and multiply the warehouse's part-files; a
+    # checkpoint keeps the coalesced partitions. Released even when the
+    # attempt fails, so a retry starts clean.
+    held: list[DataFrame] = []
+
+    def once(df: DataFrame) -> DataFrame:
+        held.append(df.localCheckpoint(eager=False))
+        return held[-1]
+
+    def store_staging(store: str, table: str) -> DataFrame | None:
+        path = f"{wh}/staging/{store}/{table}"
+        return _read_table(spark, path, staging_schema(spark, entity, table))
+
+    def staged(table: str) -> DataFrame:
+        """U1 — UNION ALL of the stores' staging tables (reference
+        make_combined_staging_table, run_etl_with_retries.py:41-44), as
+        one read over their paths."""
+        paths = [f"{wh}/staging/{s}/{table}" for s in stores]
+        paths = [p for p in paths if table_exists(spark, p)]
+        if not paths:
+            raise ValueError(f"no staging table {table} for stores {stores}")
+        return spark.read.schema(staging_schema(spark, entity, table)).parquet(*paths)
+
+    def finish(table: str, df: DataFrame) -> None:
+        out = merge.stamp_ingested(project_declared(df, table), ingest_ts)
+        atomic_overwrite(out, f"{wh}/{table}")
+
+    try:
         if entity == "customers":
-            frames = {"dim_customers": flatten.flatten_customers(nodes, store)}
-        elif entity == "orders":
-            frames = {
-                "fact_orders": flatten.flatten_orders(nodes, store),
-                "fact_order_items": flatten.explode_order_items(nodes, store),
+            # M1: TRUNCATE+INSERT full refresh (run_logs.txt:240-285)
+            finish("dim_customers", staged("dim_customers"))
+        elif entity == "products":
+            # M2/M3 full refreshes
+            finish("dim_products", staged("dim_products"))
+            finish("dim_product_variants", staged("dim_product_variants"))
+            # M4: current inventory pipeline + upsert on sku (run_logs.txt:335-435)
+            inv_r = store_staging("retail", "fact_current_inventory")
+            inv_w = store_staging("wholesale", "fact_current_inventory")
+            # single-store runs degrade to an empty other side rather than
+            # silently skipping the inventory pipeline
+            if inv_r is None and inv_w is not None:
+                inv_r = inv_w.limit(0)
+            if inv_w is None and inv_r is not None:
+                inv_w = inv_r.limit(0)
+            if inv_r is not None and inv_w is not None:
+                # each store's inventory joins its OWN staging dims (reference
+                # run_logs.txt:358/377) — ids carry no store prefix, so a
+                # cross-store dim union would duplicate shared variants
+                def store_dim(store: str, table: str) -> DataFrame:
+                    df = store_staging(store, table)
+                    if df is None:
+                        other = "wholesale" if store == "retail" else "retail"
+                        df = store_staging(other, table).limit(0)
+                    return df
+
+                current = merge.current_inventory(
+                    inv_r,
+                    inv_w,
+                    store_dim("retail", "dim_product_variants"),
+                    store_dim("retail", "dim_products"),
+                    store_dim("wholesale", "dim_product_variants"),
+                    store_dim("wholesale", "dim_products"),
+                )
+                staged_inv = merge.stamp_ingested(
+                    project_declared(current, "fact_current_inventory"), ingest_ts
+                )
+                target = _read_table(spark, f"{wh}/fact_current_inventory", staged_inv.schema)
+                # The upsert result feeds both writes, computed once; _batch
+                # marks today's rows, which are the snapshot. Materializing
+                # the whole upsert (not just current) keeps its union
+                # co-partitioned, so the table's part-files do not change.
+                upserted = staged_inv.withColumn("_batch", F.lit(True))
+                if target is not None:
+                    upserted = merge.upsert(
+                        target.withColumn("_batch", F.lit(False)),
+                        upserted,
+                        MERGE_KEYS["fact_current_inventory"],
+                    )
+                upserted = once(upserted)
+                atomic_overwrite(upserted.drop("_batch"), f"{wh}/fact_current_inventory")
+                # M5: daily snapshot — dynamic overwrite of ONLY today's
+                # partition (same-day reruns idempotent, history never
+                # rewritten; the 100 TB shape vs a full-table upsert)
+                snap = merge.stamp_ingested(
+                    merge.snapshot_rows(upserted.filter("_batch"), cfg.snapshot_date), ingest_ts
+                )
+                merge.overwrite_partitions(snap, f"{wh}/inventory_snapshot", "snapshot_date")
+        else:  # orders
+            # M6: keyed upsert; M7: delete+reload of child items (run_logs.txt:472-573).
+            # A batch can re-deliver an order (pagination overlap mid-extraction,
+            # multiple envelope files): dedupe staged rows to the latest version
+            # per key BEFORE merging, like the streaming twin does — otherwise
+            # duplicate-key rows land in the warehouse.
+            staged_orders = merge.latest_per_key(
+                staged("fact_orders"), "order_id", "updated_at", "order_number"
+            )
+            staged_orders = merge.stamp_ingested(
+                project_declared(staged_orders, "fact_orders"), ingest_ts
+            )
+
+            # children: keep only the winning parent version's rows (the
+            # transient _parent_updated_at carries the order version)
+            staged_items = merge.latest_per_key(
+                staged("fact_order_items"),
+                ["order_id", "line_item_id"],
+                "_parent_updated_at",
+                ["quantity", "title"],
+            )
+            # Items partition on the PARENT order's created month (immutable),
+            # so every existing child of a staged order lives inside the
+            # partitions the batch touches — the delete side of delete+reload
+            # never looks outside the pruned set.
+            staged_items = merge.with_month_partition(
+                staged_items, "_parent_created_at", "created_month"
+            )
+            staged_items = merge.stamp_ingested(
+                project_declared(staged_items, "fact_order_items", keep=("created_month",)),
+                ingest_ts,
+            )
+
+            # M6+M7 commit ATOMICALLY as a pair, matching the reference's
+            # one-transaction-per-entity semantics (run_etl_with_retries.py:
+            # 60-94, conn.autocommit=False at :30): both tables' touched
+            # month partitions stage into fresh generation dirs, and ONE
+            # manifest rename publishes them together — a crash between the
+            # two table writes leaves readers on the OLD consistent pair
+            # (crash-injection pinned in tests/test_pipeline.py). Partition
+            # scoping is unchanged: a daily batch still opens only the 1-2
+            # months its staged keys live in. The commit reads each staged
+            # frame twice (touched partitions, then the write).
+            store = orders_pair_store(spark, wh)
+            _migrate_orders_pair(spark, wh, store)
+            store.commit([
+                (
+                    "fact_orders",
+                    once(merge.with_month_partition(staged_orders)),
+                    lambda ex, st: st if ex is None
+                    else merge.upsert(ex, st, MERGE_KEYS["fact_orders"]),
+                ),
+                (
+                    "fact_order_items",
+                    once(staged_items),
+                    lambda ex, st: st if ex is None
+                    else merge.delete_reload(ex, st, ["order_id"]),
+                ),
+            ])
+    finally:
+        for df in held:
+            # the checkpoint's blocks belong to the RDD its plan scans
+            df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def run_daily(spark: SparkSession, cfg: PipelineConfig, ingest_ts=None) -> dict:
+    """Full daily run: parallel staging → barrier → serial merge+retries.
+
+    Returns {'staging': {(store, entity): bool}, 'merge': {entity: bool}},
+    plus 'errors' when a merge or the run-log write failed.
+    """
+    runlog = RunLog(spark, cfg.run_log_dir)
+    sources = set(cfg.raw_paths) | set(cfg.bulk_transports or ())
+    tasks = [(s, e) for s in cfg.stores for e in ENTITIES if f"{s}_{e}" in sources]
+
+    results = {"staging": {}, "merge": {}}
+    try:
+        with ThreadPoolExecutor(max_workers=cfg.max_workers) as pool:
+            futures = {
+                (s, e): pool.submit(_stage_one, spark, cfg, runlog, s, e) for s, e in tasks
             }
-        else:
-            frames = {
-                "dim_products": flatten.flatten_products(nodes),
-                "dim_product_variants": flatten.explode_variants(nodes),
-                "fact_current_inventory": flatten.inventory_from_products(nodes, store),
-            }
-        for table, df in frames.items():
-            # staging keeps extra plumbing cols (e.g. created_at on
-            # inventory) — projection to declared happens at merge time
-            atomic_overwrite(df, f"{out_dir}/{table}")
-        watermark = flatten.max_updated_at(nodes)
-        runlog.log_staging_success(run_id, store, entity, watermark)
-        # K4: archive only AFTER the staging tables + watermark are
-        # durable — a crash before this line re-reads the raw file on
-        # retry, never loses it. An archival hiccup past that commit
-        # point must NOT flip the staging run to failed (tables and
-        # watermark already landed; the raw file stays put for the next
-        # attempt) — warn and carry on.
-        if cfg.archive_dir and key in cfg.raw_paths:
+            results["staging"] = {k: f.result() for k, f in futures.items()}
+    finally:
+        # the barrier: every task's rows, failures included, in ONE write
+        try:
+            runlog.flush()
+        except Exception as e:  # noqa: BLE001
+            # no durable watermark, so no staging run counts as a success
+            results["staging"] = dict.fromkeys(results["staging"], False)
+            results["errors"] = {"run_log": str(e)}
+    staging = results["staging"]
+
+    # K4: archive a raw file only once its staging run's watermark is
+    # durable — a crash before this re-reads the raw file on retry, never
+    # loses it. An archival hiccup past that commit point must NOT flip
+    # the staging run to failed (tables and watermark already landed; the
+    # raw file stays put for the next attempt) — warn and carry on.
+    if cfg.archive_dir:
+        for (store, entity), ok in staging.items():
+            key = f"{store}_{entity}"
+            if not ok or key not in cfg.raw_paths:
+                continue
             try:
                 archive_raw(spark, cfg.raw_paths[key], cfg.archive_dir, store, entity)
             except Exception as ae:  # noqa: BLE001
@@ -305,154 +548,7 @@ def _stage_one(spark: SparkSession, cfg: PipelineConfig, runlog: RunLog, store: 
                     f"archive_raw warning ({store}/{entity}): {ae}",
                     file=sys.stderr,
                 )
-        return True
-    except Exception as e:  # noqa: BLE001
-        runlog.log_failure(run_id, store, entity, str(e))
-        return False
 
-
-def _merge_entity(spark: SparkSession, cfg: PipelineConfig, entity: str, ingest_ts) -> None:
-    """Serial merge for one entity (reference run_entity_merge)."""
-    wh = cfg.warehouse_dir
-    stores = list(cfg.stores)
-
-    def staged(table: str) -> DataFrame:
-        frames = [
-            df
-            for s in stores
-            if (df := _read_table(spark, f"{wh}/staging/{s}/{table}")) is not None
-        ]
-        return merge.combine_stores(*frames)
-
-    def finish(table: str, df: DataFrame) -> None:
-        out = merge.stamp_ingested(project_declared(df, table), ingest_ts)
-        atomic_overwrite(out, f"{wh}/{table}")
-
-    if entity == "customers":
-        # M1: TRUNCATE+INSERT full refresh (run_logs.txt:240-285)
-        finish("dim_customers", staged("dim_customers"))
-    elif entity == "products":
-        # M2/M3 full refreshes
-        finish("dim_products", staged("dim_products"))
-        finish("dim_product_variants", staged("dim_product_variants"))
-        # M4: current inventory pipeline + upsert on sku (run_logs.txt:335-435)
-        inv_r = _read_table(spark, f"{wh}/staging/retail/fact_current_inventory")
-        inv_w = _read_table(spark, f"{wh}/staging/wholesale/fact_current_inventory")
-        # single-store runs degrade to an empty other side rather than
-        # silently skipping the inventory pipeline
-        if inv_r is None and inv_w is not None:
-            inv_r = inv_w.limit(0)
-        if inv_w is None and inv_r is not None:
-            inv_w = inv_r.limit(0)
-        if inv_r is not None and inv_w is not None:
-            # each store's inventory joins its OWN staging dims (reference
-            # run_logs.txt:358/377) — ids carry no store prefix, so a
-            # cross-store dim union would duplicate shared variants
-            def store_dim(store: str, table: str) -> DataFrame:
-                df = _read_table(spark, f"{wh}/staging/{store}/{table}")
-                if df is None:
-                    other = "wholesale" if store == "retail" else "retail"
-                    df = _read_table(spark, f"{wh}/staging/{other}/{table}").limit(0)
-                return df
-
-            current = merge.current_inventory(
-                inv_r,
-                inv_w,
-                store_dim("retail", "dim_product_variants"),
-                store_dim("retail", "dim_products"),
-                store_dim("wholesale", "dim_product_variants"),
-                store_dim("wholesale", "dim_products"),
-            )
-            target = _read_table(spark, f"{wh}/fact_current_inventory")
-            staged_inv = merge.stamp_ingested(
-                project_declared(current, "fact_current_inventory"), ingest_ts
-            )
-            if target is not None:
-                staged_inv = merge.upsert(target, staged_inv, MERGE_KEYS["fact_current_inventory"])
-            atomic_overwrite(staged_inv, f"{wh}/fact_current_inventory")
-            # M5: daily snapshot — dynamic overwrite of ONLY today's
-            # partition (same-day reruns idempotent, history never
-            # rewritten; the 100 TB shape vs a full-table upsert)
-            snap = merge.stamp_ingested(
-                merge.snapshot_rows(current, cfg.snapshot_date), ingest_ts
-            )
-            merge.overwrite_partitions(snap, f"{wh}/inventory_snapshot", "snapshot_date")
-    else:  # orders
-        # M6: keyed upsert; M7: delete+reload of child items (run_logs.txt:472-573).
-        # A batch can re-deliver an order (pagination overlap mid-extraction,
-        # multiple envelope files): dedupe staged rows to the latest version
-        # per key BEFORE merging, like the streaming twin does — otherwise
-        # duplicate-key rows land in the warehouse.
-        staged_orders = merge.latest_per_key(
-            staged("fact_orders"), "order_id", "updated_at", "order_number"
-        )
-        staged_orders = merge.stamp_ingested(
-            project_declared(staged_orders, "fact_orders"), ingest_ts
-        )
-
-        # children: keep only the winning parent version's rows (the
-        # transient _parent_updated_at carries the order version)
-        staged_items = merge.latest_per_key(
-            staged("fact_order_items"),
-            ["order_id", "line_item_id"],
-            "_parent_updated_at",
-            ["quantity", "title"],
-        )
-        # Items partition on the PARENT order's created month (immutable),
-        # so every existing child of a staged order lives inside the
-        # partitions the batch touches — the delete side of delete+reload
-        # never looks outside the pruned set.
-        staged_items = merge.with_month_partition(
-            staged_items, "_parent_created_at", "created_month"
-        )
-        staged_items = merge.stamp_ingested(
-            project_declared(staged_items, "fact_order_items", keep=("created_month",)),
-            ingest_ts,
-        )
-
-        # M6+M7 commit ATOMICALLY as a pair, matching the reference's
-        # one-transaction-per-entity semantics (run_etl_with_retries.py:
-        # 60-94, conn.autocommit=False at :30): both tables' touched
-        # month partitions stage into fresh generation dirs, and ONE
-        # manifest rename publishes them together — a crash between the
-        # two table writes leaves readers on the OLD consistent pair
-        # (crash-injection pinned in tests/test_pipeline.py). Partition
-        # scoping is unchanged: a daily batch still opens only the 1-2
-        # months its staged keys live in.
-        store = orders_pair_store(spark, wh)
-        _migrate_orders_pair(spark, wh, store)
-        store.commit([
-            (
-                "fact_orders",
-                merge.with_month_partition(staged_orders),
-                lambda ex, st: st if ex is None
-                else merge.upsert(ex, st, MERGE_KEYS["fact_orders"]),
-            ),
-            (
-                "fact_order_items",
-                staged_items,
-                lambda ex, st: st if ex is None
-                else merge.delete_reload(ex, st, ["order_id"]),
-            ),
-        ])
-
-
-def run_daily(spark: SparkSession, cfg: PipelineConfig, ingest_ts=None) -> dict:
-    """Full daily run: parallel staging → barrier → serial merge+retries.
-
-    Returns {'staging': {(store, entity): bool}, 'merge': {entity: bool}}.
-    """
-    runlog = RunLog(spark, cfg.run_log_dir)
-    sources = set(cfg.raw_paths) | set(cfg.bulk_transports or ())
-    tasks = [(s, e) for s in cfg.stores for e in ENTITIES if f"{s}_{e}" in sources]
-
-    with ThreadPoolExecutor(max_workers=cfg.max_workers) as pool:
-        futures = {
-            (s, e): pool.submit(_stage_one, spark, cfg, runlog, s, e) for s, e in tasks
-        }
-        staging = {k: f.result() for k, f in futures.items()}
-
-    results = {"staging": staging, "merge": {}}
     if not all(staging.values()):  # barrier (daily_scheduler.py:168-172)
         return results
 

@@ -157,8 +157,9 @@ class PairStore:
             df = df.unionByName(f)
         return df
 
-    def _read_partitions(self, table: str, part_keys: set[str]) -> DataFrame | None:
-        """Current rows of just the given partitions (the merge input)."""
+    def _read_partitions(self, table: str, part_keys: set[str], schema) -> DataFrame | None:
+        """Current rows of just the given partitions (the merge input),
+        read with the table's known ``schema`` (no inference job)."""
         entries = self.manifest()["tables"].get(table) or {}
         hits = {k: g for k, g in entries.items() if k in part_keys}
         if not hits:
@@ -170,7 +171,7 @@ class PairStore:
         for gen, keys in sorted(by_gen.items()):
             base = self._gen_dir(table, gen)
             frames.append(
-                self.spark.read.option("basePath", base).parquet(
+                self.spark.read.schema(schema).option("basePath", base).parquet(
                     *[f"{base}/{self.partition_col}={k}" for k in sorted(keys)]
                 )
             )
@@ -201,7 +202,9 @@ class PairStore:
         current rows of ONLY the partitions the staged batch touches
         (partition-scoped, like ``merge.upsert_partitioned``) and returns
         the new state of those partitions. ``staged_df`` must carry
-        ``partition_col``.
+        ``partition_col`` and have the table's schema; it is read twice
+        (touched partitions, then the write), so callers pass it
+        materialized.
 
         Crash contract: every write before the final rename lands in
         fresh generation dirs no committed manifest references — a crash
@@ -222,7 +225,7 @@ class PairStore:
                 for r in staged.select(self.partition_col).distinct().collect()
             ]
             touched = {_encode_partition(v) for v in touched_vals}
-            existing = self._read_partitions(table, touched)
+            existing = self._read_partitions(table, touched, staged.schema)
             if existing is not None:
                 merged = merge_fn(existing, staged.select(*existing.columns))
             else:

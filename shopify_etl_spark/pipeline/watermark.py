@@ -7,10 +7,12 @@ the next run restarts extraction ``2 + days_gap`` days before the last
 success, deliberately re-reading late updates which the idempotent keyed
 merges absorb (the reference's late-data model, SURVEY.md §2.10).
 
-Storage is an append-only parquet directory — each append is one small
-file written atomically by Spark's commit protocol; reads aggregate.
-Unlike the reference, the watermark is a real timestamp, not a
-lexicographically-compared string (SURVEY §1.2 trap).
+Storage is an append-only parquet directory. Rows buffer on the driver
+and ``flush`` writes them as ONE file per run (``run_daily`` flushes at
+the staging barrier), atomically through Spark's commit protocol; reads
+flush first, then aggregate over every file. Unlike the reference, the
+watermark is a real timestamp, not a lexicographically-compared string
+(SURVEY §1.2 trap).
 """
 
 from __future__ import annotations
@@ -50,9 +52,11 @@ class RunLog:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        # Concurrent append jobs to one parquet path share the committer's
-        # _temporary staging dir and clobber each other; audit appends are
-        # tiny and driver-coordinated, so serializing them is free.
+        self._rows: list[dict] = []
+        # Staging threads log concurrently into the shared buffer. The
+        # lock also serializes flushes: concurrent append jobs to one
+        # parquet path share the committer's _temporary dir and clobber
+        # each other.
         self._lock = threading.Lock()
 
     def _append(self, row: dict) -> None:
@@ -63,9 +67,22 @@ class RunLog:
             "notes": None,
         }
         with self._lock:
-            self.spark.createDataFrame(
-                [{**defaults, **row}], RUN_LOG_SCHEMA
-            ).coalesce(1).write.mode("append").parquet(self.path)
+            self._rows.append({**defaults, **row})
+
+    def flush(self) -> None:
+        """Write the buffered rows as one parquet file. The pandas frame
+        goes through Arrow, far cheaper than the row-list path for a
+        driver-side batch. Rows stay buffered if the write fails."""
+        import pandas as pd
+
+        with self._lock:
+            if not self._rows:
+                return
+            rows = pd.DataFrame(self._rows, columns=RUN_LOG_SCHEMA.names)
+            self.spark.createDataFrame(rows, RUN_LOG_SCHEMA).coalesce(1).write.mode(
+                "append"
+            ).parquet(self.path)
+            self._rows.clear()
 
     def read(self):
         # Only a MISSING log means "first run"; any other failure (corrupt
@@ -73,6 +90,7 @@ class RunLog:
         # reset the watermark and trigger a full re-extraction.
         from .runner import table_exists
 
+        self.flush()
         if not table_exists(self.spark, self.path):
             return self.spark.createDataFrame([], RUN_LOG_SCHEMA)
         return self.spark.read.schema(RUN_LOG_SCHEMA).parquet(self.path)

@@ -24,6 +24,19 @@ GATE_CONFS = {
 }
 
 
+def set_confs(spark, confs: dict) -> dict:
+    """Set session confs (a None value unsets one); returns the previous
+    values in the same form, so passing them back restores the session
+    exactly — including confs that were never set."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+    return saved
+
+
 def fmt_plan(df) -> str:
     """``explain('formatted')`` text of a DataFrame, pre-execution."""
     jvm = df.sparkSession._jvm
@@ -35,18 +48,18 @@ def fmt_plan(df) -> str:
 def build_catalog_plans(spark, sf_dir: str) -> dict:
     """name -> {plan, subtrees, columns} for every catalog query.
 
-    Built under the gate confs (saved/restored around the loop).
-    Builders materialize shared subtrees, and substitution state is
-    session-global — clearCache around each build keeps one query's
-    building blocks out of another query's plan (mirrors bench.py's
-    release between queries).
+    Built under the gate confs, restored (or unset, when the session had
+    no value) after the loop. clearCache around each build empties the
+    session-global cache manager, so a frame one builder ``cache()``s is
+    never substituted into another query's plan. It does not release
+    the builders' shared subtrees: those are lazy ``localCheckpoint``s
+    (``operators/materialize.py``), whose plans end at their own
+    ``Scan ExistingRDD`` leaf and so cannot leak into another query.
     """
     from shopify_etl_spark.operators.materialize import capture_subtrees
     from shopify_etl_spark.plans import QUERIES
 
-    saved = {k: spark.conf.get(k, None) for k in GATE_CONFS}
-    for k, v in GATE_CONFS.items():
-        spark.conf.set(k, v)
+    saved = set_confs(spark, GATE_CONFS)
     plans: dict[str, dict] = {}
     try:
         for name, spec in QUERIES.items():
@@ -60,7 +73,5 @@ def build_catalog_plans(spark, sf_dir: str) -> dict:
             }
         spark.catalog.clearCache()
     finally:
-        for k, v in saved.items():
-            if v is not None:
-                spark.conf.set(k, v)
+        set_confs(spark, saved)
     return plans

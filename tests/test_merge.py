@@ -96,7 +96,7 @@ def test_current_inventory_pipeline(spark, fixture_paths):
     w_nodes = read_envelope(spark, str(fixture_paths["wholesale_products"]), "products")
     inv_r = flatten.inventory_from_products(r_nodes, "retail")
     inv_w = flatten.inventory_from_products(w_nodes, "wholesale")
-    variants = merge.combine_stores(flatten.explode_variants(r_nodes), flatten.explode_variants(w_nodes))
+    variants = flatten.explode_variants(r_nodes).unionByName(flatten.explode_variants(w_nodes))
 
     out = merge.current_inventory(
         inv_r,

@@ -313,6 +313,144 @@ def test_runlog_watermark_and_lookback(spark, tmp_path):
     assert log.last_watermark("retail", "orders") == datetime(2025, 11, 26, 12, 0, 0)
 
 
+def _runlog_files(cfg) -> list:
+    from pathlib import Path
+
+    return sorted(Path(cfg.run_log_dir).glob("*.parquet"))
+
+
+def test_run_log_one_file_per_run_with_observed_watermarks(spark, tmp_path, fixture_paths):
+    """One run_daily writes ONE run-log file: a RUNNING and a SUCCESS row
+    per staging task, each SUCCESS row carrying the watermark
+    flatten.max_updated_at gives over that task's nodes — on the envelope
+    path and on the bulk path (retail customers)."""
+    from shopify_etl_spark.operators import flatten
+    from shopify_etl_spark.sources import read_envelope, read_jsonl
+    from shopify_etl_spark.sources.bulk import FakeBulkTransport
+
+    cfg = _cfg(tmp_path, fixture_paths)
+    cfg.raw_paths = {k: v for k, v in cfg.raw_paths.items() if k != "retail_customers"}
+    cfg.bulk_transports = {
+        "retail_customers": FakeBulkTransport(
+            str(fixture_paths["retail_customers"]), running_polls=0
+        )
+    }
+    cfg.bulk_poll_interval_s = 0.0
+    res = run_daily(spark, cfg, ingest_ts="2025-11-28 06:00:00")
+    assert all(res["staging"].values()) and all(res["merge"].values()), res
+    assert len(res["staging"]) == 6
+    assert len(_runlog_files(cfg)) == 1
+
+    rows = RunLog(spark, cfg.run_log_dir).read().collect()
+    assert len(rows) == 12
+    for store, entity in res["staging"]:
+        mine = [r for r in rows if (r.store_name, r.entity_name) == (store, entity)]
+        assert sorted(r.status for r in mine) == ["RUNNING", "SUCCESS"], mine
+        assert len({r.id for r in mine}) == 1
+        key = f"{store}_{entity}"
+        if key in cfg.raw_paths:
+            nodes = read_envelope(spark, cfg.raw_paths[key], entity)
+        else:  # the bulk path: the JSONL the bulk operation landed
+            nodes = read_jsonl(
+                spark, f"{cfg.warehouse_dir}/landing/{store}/{entity}.jsonl", entity
+            )
+        (success,) = [r for r in mine if r.status == "SUCCESS"]
+        expect = datetime.fromisoformat(flatten.max_updated_at(nodes))
+        assert success.source_updated_at == expect, (store, entity)
+
+    # the next run adds exactly one more file
+    run_daily(spark, cfg, ingest_ts="2025-11-28 06:00:00")
+    assert len(_runlog_files(cfg)) == 2
+
+
+def test_failed_run_log_write_holds_the_barrier(
+    spark, tmp_path, tmp_path_factory, monkeypatch
+):
+    """The run log lands once, at the staging barrier. If that write
+    fails no watermark is durable: no merge runs, no raw file is archived,
+    and a clean re-run ends with the warehouse of a run that never
+    failed."""
+    import shutil
+    from pathlib import Path
+
+    src = make_fixture_set(tmp_path_factory.mktemp("shopify_flush"))
+    raw_dir = tmp_path / "landing"
+    raw_dir.mkdir()
+    raw = {}
+    for k, v in src.items():
+        if not k.endswith("_b2"):
+            raw[k] = str(shutil.copy(str(v), raw_dir / f"{k}.json"))
+    tables = ("dim_customers", "dim_products", "dim_product_variants", "fact_orders",
+              "fact_order_items", "fact_current_inventory", "inventory_snapshot")
+
+    def snapshot(wh):
+        return {t: sorted(map(tuple, _read(spark, wh, t).collect())) for t in tables}
+
+    # the run that never failed (no archiving, so the raw files stay)
+    ref = PipelineConfig(
+        raw_paths=raw, warehouse_dir=str(tmp_path / "ref"),
+        run_log_dir=str(tmp_path / "ref_log"), snapshot_date="2025-11-28",
+    )
+    assert all(run_daily(spark, ref, ingest_ts="2025-11-28 06:00:00")["merge"].values())
+
+    cfg = PipelineConfig(
+        raw_paths=raw, warehouse_dir=str(tmp_path / "wh"),
+        run_log_dir=str(tmp_path / "runlog"), snapshot_date="2025-11-28",
+        archive_dir=str(tmp_path / "archive"),
+    )
+
+    def failing_flush(self):
+        raise IOError("injected run-log write failure")
+
+    monkeypatch.setattr(RunLog, "flush", failing_flush)
+    res = run_daily(spark, cfg, ingest_ts="2025-11-28 06:00:00")
+    assert res["merge"] == {}
+    assert not any(res["staging"].values())
+    assert "injected" in res["errors"]["run_log"]
+    assert all(Path(p).exists() for p in raw.values())
+    assert not (tmp_path / "archive").exists() or not any((tmp_path / "archive").rglob("*.json"))
+    assert _runlog_files(cfg) == []
+    monkeypatch.undo()
+
+    res = run_daily(spark, cfg, ingest_ts="2025-11-28 06:00:00")
+    assert all(res["staging"].values()) and all(res["merge"].values()), res
+    assert snapshot(cfg.warehouse_dir) == snapshot(ref.warehouse_dir)
+    assert not any(Path(p).exists() for p in raw.values())  # archived now
+    assert len(_runlog_files(cfg)) == 1
+
+
+#: Spark jobs of one warm run_daily on the fixture set before the run log
+#: was buffered and the watermark observed (measured on local[8] with 4
+#: shuffle partitions, the test session's settings).
+JOBS_PER_RUN_BEFORE = 93
+
+
+def test_warm_run_job_budget(spark, tmp_path, fixture_paths):
+    """A warm day's Spark jobs stay at most half of what they were before
+    run-log writes were batched, watermarks observed and merge inputs
+    computed once — a change that brings back per-task or repeated jobs
+    fails here. Counted from Spark's status store, as the benchmark does."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    def last_job_id() -> int:
+        it = store.jobsList(None).iterator()
+        newest = -1
+        while it.hasNext():
+            newest = max(newest, it.next().jobId())
+        return newest
+
+    cfg = _cfg(tmp_path, fixture_paths)
+    assert all(run_daily(spark, cfg, ingest_ts="2025-11-28 06:00:00")["merge"].values())
+    cfg.raw_paths = dict(cfg.raw_paths)
+    cfg.raw_paths["retail_orders"] = str(fixture_paths["retail_orders_b2"])
+    cfg.raw_paths["wholesale_orders"] = str(fixture_paths["wholesale_orders_b2"])
+    before = last_job_id()
+    res = run_daily(spark, cfg, ingest_ts="2025-11-29 06:00:00")
+    jobs = last_job_id() - before
+    assert all(res["merge"].values()), res
+    assert jobs <= JOBS_PER_RUN_BEFORE // 2, jobs
+
+
 def test_archive_and_bi_trigger(spark, tmp_path, tmp_path_factory):
     """K4 + O7 end to end: a successful run moves the raw landing files
     into the archive tree (idempotently) and kicks the BI refresh webhook

@@ -34,6 +34,7 @@ import re
 import pytest
 
 from shopify_etl_spark.plans import QUERIES
+from tests._plan_cache import GATE_CONFS, set_confs
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -464,22 +465,13 @@ def _kept_details(txt: str) -> str:
 
 @pytest.fixture(scope="module")
 def gate_spark(spark):
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.maxMetadataStringLength",
-        )
-    }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # 100-char default truncates PushedFilters/ReadSchema mid-list, which
-    # reads as "filter not pushed" / "narrower scan than real" (see module
-    # docstring).
-    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
+    # GATE_CONFS: auto-broadcast off, and metadata strings untruncated —
+    # the 100-char default cuts PushedFilters/ReadSchema mid-list, which
+    # reads as "filter not pushed" / "narrower scan than real" (see
+    # module docstring).
+    saved = set_confs(spark, GATE_CONFS)
     yield spark
-    for k, v in saved.items():
-        if v is not None:
-            spark.conf.set(k, v)
+    set_confs(spark, saved)
 
 
 # catalog_plans (tests/conftest.py, session-scoped): one build per
