@@ -5,17 +5,17 @@ run_logs.txt:240-573).
 Pure-Spark merge semantics (no Delta dependency in this environment):
 upsert/delete-reload are anti-join + unionByName rewrites, full refresh is
 ``mode("overwrite")``, snapshots are date-partitioned with per-partition
-overwrite. Each write is atomic per table (staged temp dir + commit
-protocol); cross-table atomicity is replaced by the reference's own crash
-model — lookback re-extraction + idempotent keyed merges
-(daily_scheduler.py:75-81).
+overwrite. These functions only build the merged rows; publishing them is
+the caller's job. The orders pair commits its partition-scoped upsert and
+delete+reload in one transaction through ``pipeline.txn_store.PairStore``,
+as the reference does (run_etl_with_retries.py:60-94).
 
 Scale notes baked into each op:
 
-* Upsert touches only (staged ∪ matching-key) rows; at 100 TB the target
-  is partitioned (by date) and the anti-join right side — the staged key
-  set — is small per run, so AQE broadcasts it and unchanged partitions
-  are never rewritten (see ``upsert_partitioned``).
+* Upsert touches only (staged ∪ matching-key) rows, and the anti-join
+  right side — the staged key set — is small per run, so AQE broadcasts
+  it. At 100 TB the caller hands it only the partitions the batch touches
+  (``PairStore.commit``), so unchanged partitions are never rewritten.
 * The inventory pipeline broadcasts the dim sides and dedups with one
   window over the normalized key.
 """
@@ -176,130 +176,6 @@ def overwrite_partitions(df: DataFrame, path: str, partition_cols) -> None:
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_cols)
         .parquet(path)
-    )
-
-
-def _merge_into_partitions(
-    spark, target_path: str, staged: DataFrame, partition_col: str, merge_fn,
-    derive_partition=None,
-) -> list:
-    """Shared partition-pruned merge machinery: read ONLY the target
-    partitions whose values appear in the staged batch (static partition
-    pruning on the IN-filter), apply ``merge_fn(existing, staged)`` there,
-    and rewrite just those directories via dynamic partition overwrite.
-    Every other partition's files are never opened. Returns the partition
-    values rewritten.
-
-    Legacy-layout migration: a warehouse written by the pre-partitioned
-    engine has no ``partition_col`` in its schema (and its part-files sit
-    at the table root). Filtering on the absent column would raise, and a
-    dynamic partition overwrite would leave the root files in place beside
-    the new dirs. When ``derive_partition`` (existing rows → rows with the
-    partition column) is supplied, such a table is migrated ONCE with a
-    full merge + atomic partitioned rewrite; without it the mismatch is a
-    hard error instead of an AnalysisException deep in the filter."""
-    from ..pipeline.runner import atomic_overwrite, table_exists
-
-    values = [r[0] for r in staged.select(partition_col).distinct().collect()]
-    # Hadoop-FS existence check, NOT pathlib: Path('s3://...').exists() is
-    # always False and would silently overwrite instead of merging.
-    if not table_exists(spark, target_path):
-        overwrite_partitions(staged, target_path, partition_col)
-        return values
-
-    existing_all = spark.read.parquet(target_path)
-    if partition_col not in existing_all.columns:  # legacy unpartitioned layout
-        if derive_partition is None:
-            raise ValueError(
-                f"{target_path} has no {partition_col!r} column (legacy "
-                "unpartitioned layout) and no derive_partition was given; "
-                "rebuild the table or pass a derivation"
-            )
-        existing = derive_partition(existing_all)
-        merged = merge_fn(existing, staged.select(*existing.columns))
-        atomic_overwrite(merged, target_path, partition_cols=[partition_col])
-        # re-read for the touched list: ``merged``'s plan references the
-        # legacy files the swap just deleted (partition values come from
-        # directory names — no data files are opened)
-        return sorted(
-            {
-                r[0]
-                for r in spark.read.parquet(target_path)
-                .select(partition_col)
-                .distinct()
-                .collect()
-            },
-            key=lambda v: (v is None, str(v)),
-        )
-
-    # isin([...]) never matches NULL, so a null partition value (written as
-    # __HIVE_DEFAULT_PARTITION__) must be pruned-in explicitly or its
-    # existing rows would be dropped by the dynamic overwrite of that dir.
-    non_null = [v for v in values if v is not None]
-    pred = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-    if any(v is None for v in values):
-        pred = pred | F.col(partition_col).isNull()
-    existing = spark.read.parquet(target_path).filter(pred)
-    merged = merge_fn(existing, staged.select(*existing.columns))
-    overwrite_partitions(merged, target_path, partition_col)
-    return values
-
-
-def upsert_partitioned(
-    spark,
-    target_path: str,
-    staged: DataFrame,
-    key_cols,
-    partition_col: str,
-    derive_partition=None,
-) -> list:
-    """Partition-scoped keyed upsert — the 100 TB shape of M6.
-
-    A full-table upsert rewrites everything; at scale the target is
-    partitioned (fact_orders by month of created_at) and a daily batch
-    touches a handful of partitions, so only those are read and rewritten.
-
-    Caveat (same as Delta's MERGE on partitioned tables): if an UPDATE
-    moves a row ACROSS partitions (its partition value changed), the old
-    row lives in an untouched partition and survives. Keys must be stable
-    within their partition value — true for fact_orders (created_at never
-    changes; updated_at does) and for snapshots.
-
-    Returns the list of partition values rewritten.
-    """
-    key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    return _merge_into_partitions(
-        spark, target_path, staged, partition_col,
-        lambda existing, batch: upsert(existing, batch, key_cols),
-        derive_partition=derive_partition,
-    )
-
-
-def delete_reload_partitioned(
-    spark,
-    target_path: str,
-    staged: DataFrame,
-    parent_keys,
-    partition_col: str,
-    derive_partition=None,
-) -> list:
-    """Partition-scoped delete+reload — the 100 TB shape of M7
-    (fact_order_items; reference run_logs.txt:545-573 deletes only
-    children of staged orders, never the whole table).
-
-    Children inherit the PARENT's partition value (month of the order's
-    created_at, immutable), so every existing child of a staged parent
-    lives in a partition this batch also touches — the delete side of
-    delete+reload never needs to look outside the pruned set. Untouched
-    months' files are never opened.
-
-    Returns the list of partition values rewritten.
-    """
-    parent_keys = [parent_keys] if isinstance(parent_keys, str) else list(parent_keys)
-    return _merge_into_partitions(
-        spark, target_path, staged, partition_col,
-        lambda existing, batch: delete_reload(existing, batch, parent_keys),
-        derive_partition=derive_partition,
     )
 
 

@@ -20,16 +20,21 @@ Spark twin of the reference's daily job (reference daily_scheduler.py:
   one consumer is computed once (a local checkpoint).
 
 Single-table warehouse merges are staged to a ``_tmp`` sibling and
-swapped in by ``atomic_overwrite``. The orders entity writes TWO tables
-per run (fact_orders + fact_order_items) and the reference commits them
-in one transaction (run_etl_with_retries.py:60-94), so the pair
-publishes through the manifest store in ``txn_store.py`` — one atomic
-rename covers both tables, closing SURVEY §7.4 risk 1.
+swapped in by ``atomic_overwrite``; the writer puts back a table a crash
+left mid-swap before it reads or replaces it. The daily snapshot
+overwrites only its own date partition. The orders entity writes TWO
+tables per run (fact_orders + fact_order_items) and the reference
+commits them in one transaction (run_etl_with_retries.py:60-94), so the
+pair publishes through the manifest store in ``txn_store.py`` — one
+atomic rename covers both tables, closing SURVEY §7.4 risk 1. That
+store's commit is the package's only partition-scoped merge; the
+streaming feed (``streaming/incremental.py``) commits through it too.
 """
 
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -113,7 +118,7 @@ def table_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
-def atomic_overwrite(df: DataFrame, path: str, partition_cols=None) -> None:
+def atomic_overwrite(df: DataFrame, path: str) -> None:
     """Write to a _tmp sibling, then swap — readers never see a half table,
     and the source table can be part of ``df``'s own plan (parquet can't
     overwrite a path it is concurrently reading). Uses the Hadoop FS API
@@ -121,33 +126,21 @@ def atomic_overwrite(df: DataFrame, path: str, partition_cols=None) -> None:
 
     The swap is two renames: ``path`` → ``path._old``, then ``_tmp`` →
     ``path``. Between them the table is ABSENT. A crash there leaves the
-    previous version only in ``path._old``; the next merge reads the
-    table as missing (``_read_table`` → None), and the next call here
-    deletes ``_old`` first — for ``fact_current_inventory`` that silently
-    loses the rows of every SKU not delivered that day. Publishing the
-    warehouse through one manifest store (as ``txn_store.py`` does for
-    the orders pair; ROADMAP.md, "One manifest store") closes this
-    window. Rename results are checked: Hadoop signals rename failure by
-    returning false, not by raising.
-
-    ``partition_cols`` writes the new table hive-partitioned — used by the
-    one-time legacy→partitioned layout migration, where a dynamic
-    partition overwrite would leave the old UNpartitioned part-files at
-    the table root alongside the new partition dirs (readers would see
-    both).
+    previous version only in ``path._old``; the writer's next read of the
+    table (``_read_table``) or its next swap here puts it back, so no row
+    is lost. Readers still see the table as absent during the window;
+    publishing the warehouse through one manifest store (as
+    ``txn_store.py`` does for the orders pair; ROADMAP.md, "One manifest
+    store") closes it. Rename results are checked: Hadoop signals rename
+    failure by returning false, not by raising.
     """
     tmp = f"{path}._tmp"
-    writer = df.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(tmp)
+    df.write.mode("overwrite").parquet(tmp)
     spark = df.sparkSession
     fs, target = _hadoop_fs(spark, path)
     tmp_path = _hadoop_fs(spark, tmp)[1]
     old_path = _hadoop_fs(spark, f"{path}._old")[1]
-    if fs.exists(old_path):  # leftover from an interrupted previous swap
-        fs.delete(old_path, True)
-    had_previous = fs.exists(target)
+    had_previous = _finish_interrupted_swap(fs, target, old_path)
     if had_previous and not fs.rename(target, old_path):
         raise IOError(f"atomic_overwrite: failed to move aside {path}")
     if not fs.rename(tmp_path, target):
@@ -159,10 +152,30 @@ def atomic_overwrite(df: DataFrame, path: str, partition_cols=None) -> None:
         fs.delete(old_path, True)
 
 
+def _finish_interrupted_swap(fs, target, old_path) -> bool:
+    """Settle what a crash inside ``atomic_overwrite`` left behind, and
+    return whether the table exists. Target absent beside ``_old``: the
+    crash fell between the two renames, so ``_old`` is the table and is
+    renamed back. Both present: it fell after them, so ``_old`` is stale.
+    Only the writer calls this — a reader renaming inside a live swap
+    would break it."""
+    if fs.exists(target):
+        if fs.exists(old_path):
+            fs.delete(old_path, True)
+        return True
+    if not fs.exists(old_path):
+        return False
+    if not fs.rename(old_path, target):
+        raise IOError(f"atomic_overwrite: failed to restore {old_path} to {target}")
+    return True
+
+
 def _read_table(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame | None:
-    """The parquet table at ``path`` (None if absent). A known ``schema``
-    skips the schema-inference job a bare read runs."""
-    if not table_exists(spark, path):
+    """The writer's read of the parquet table at ``path`` (None if
+    absent), after settling an interrupted swap. A known ``schema`` skips
+    the schema-inference job a bare read runs."""
+    fs, target = _hadoop_fs(spark, path)
+    if not _finish_interrupted_swap(fs, target, _hadoop_fs(spark, f"{path}._old")[1]):
         return None
     reader = spark.read.schema(schema) if schema is not None else spark.read
     return reader.parquet(path)
@@ -210,58 +223,16 @@ def orders_pair_store(spark: SparkSession, warehouse_dir: str):
 def read_warehouse_table(spark: SparkSession, warehouse_dir: str, table: str):
     """Resolve a warehouse table to a DataFrame (None if absent).
 
-    The orders pair lives in the manifest store once migrated — readers
-    resolve the latest committed manifest and always see a CONSISTENT
-    (fact_orders, fact_order_items) pair; every other table is a plain
-    parquet directory maintained by ``atomic_overwrite``.
+    The orders pair resolves through the latest committed manifest of its
+    store, so readers always see a CONSISTENT (fact_orders,
+    fact_order_items) pair; every other table is a plain parquet
+    directory maintained by ``atomic_overwrite``. A read here never
+    renames anything.
     """
     if table in ORDERS_PAIR:
-        store = orders_pair_store(spark, warehouse_dir)
-        if store.exists():
-            return store.read_table(table)
-    return _read_table(spark, f"{warehouse_dir}/{table}")
-
-
-def _migrate_orders_pair(spark: SparkSession, wh: str, store) -> None:
-    """One-time adoption of a plain-layout orders pair into the
-    transactional store (the analog of ``_merge_into_partitions``'s
-    legacy migration). The migrated snapshot publishes as version 1 with
-    the usual single-rename atomicity; the plain directories are removed
-    only AFTER that publish (and re-swept if a crash left them behind —
-    readers already prefer the store, so the leftovers are inert)."""
-    plain_orders = f"{wh}/fact_orders"
-    plain_items = f"{wh}/fact_order_items"
-    if not store.exists():
-        updates = []
-        po = _read_table(spark, plain_orders)
-        if po is not None:
-            if "created_month" not in po.columns:
-                po = merge.with_month_partition(po)
-            updates.append(("fact_orders", po, lambda ex, st: st))
-        pi = _read_table(spark, plain_items)
-        if pi is not None:
-            if "created_month" not in pi.columns:
-                if po is None:
-                    raise ValueError(
-                        f"{plain_items} has no created_month column and no "
-                        f"{plain_orders} to derive it from; rebuild the pair"
-                    )
-                # legacy items carry no parent timestamp: derive the month
-                # from the parent order; orphans land in the NULL partition
-                # rather than being dropped
-                parents = po.select("order_id", "created_month")
-                pi = pi.join(parents, "order_id", "left").select(
-                    *pi.columns, "created_month"
-                )
-            updates.append(("fact_order_items", pi, lambda ex, st: st))
-        if not updates:
-            return
-        store.commit(updates)
-    # sweep the plain dirs (post-publish; idempotent across crashes)
-    for path in (plain_orders, plain_items):
-        fs, p = _hadoop_fs(spark, path)
-        if fs.exists(p):
-            fs.delete(p, True)
+        return orders_pair_store(spark, warehouse_dir).read_table(table)
+    path = f"{warehouse_dir}/{table}"
+    return spark.read.parquet(path) if table_exists(spark, path) else None
 
 
 def _staging_frames(nodes: DataFrame, store: str, entity: str) -> dict[str, DataFrame]:
@@ -344,20 +315,32 @@ def _stage_one(spark: SparkSession, cfg: PipelineConfig, runlog: RunLog, store: 
             nodes.unpersist()
 
 
-def _merge_entity(spark: SparkSession, cfg: PipelineConfig, entity: str, ingest_ts) -> None:
-    """Serial merge for one entity (reference run_entity_merge)."""
-    wh = cfg.warehouse_dir
-    stores = list(cfg.stores)
-    # Merge inputs read twice are computed once, as lazy local
-    # checkpoints: cache() would run the cached plan without AQE's
-    # partition coalescing and multiply the warehouse's part-files; a
-    # checkpoint keeps the coalesced partitions. Released even when the
-    # attempt fails, so a retry starts clean.
+@contextmanager
+def computed_once():
+    """Yield ``once(df)``, which returns ``df`` as a lazy local checkpoint,
+    so a merge input read twice is computed once. cache() would run the
+    cached plan without AQE's partition coalescing and multiply the
+    warehouse's part-files; a checkpoint keeps the coalesced partitions.
+    Every checkpoint is released on exit, also when the body fails, so a
+    retry starts clean."""
     held: list[DataFrame] = []
 
     def once(df: DataFrame) -> DataFrame:
         held.append(df.localCheckpoint(eager=False))
         return held[-1]
+
+    try:
+        yield once
+    finally:
+        for df in held:
+            # the checkpoint's blocks belong to the RDD its plan scans
+            df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _merge_entity(spark: SparkSession, cfg: PipelineConfig, entity: str, ingest_ts) -> None:
+    """Serial merge for one entity (reference run_entity_merge)."""
+    wh = cfg.warehouse_dir
+    stores = list(cfg.stores)
 
     def store_staging(store: str, table: str) -> DataFrame | None:
         path = f"{wh}/staging/{store}/{table}"
@@ -377,7 +360,7 @@ def _merge_entity(spark: SparkSession, cfg: PipelineConfig, entity: str, ingest_
         out = merge.stamp_ingested(project_declared(df, table), ingest_ts)
         atomic_overwrite(out, f"{wh}/{table}")
 
-    try:
+    with computed_once() as once:
         if entity == "customers":
             # M1: TRUNCATE+INSERT full refresh (run_logs.txt:240-285)
             finish("dim_customers", staged("dim_customers"))
@@ -476,13 +459,11 @@ def _merge_entity(spark: SparkSession, cfg: PipelineConfig, entity: str, ingest_
             # month partitions stage into fresh generation dirs, and ONE
             # manifest rename publishes them together — a crash between the
             # two table writes leaves readers on the OLD consistent pair
-            # (crash-injection pinned in tests/test_pipeline.py). Partition
-            # scoping is unchanged: a daily batch still opens only the 1-2
-            # months its staged keys live in. The commit reads each staged
-            # frame twice (touched partitions, then the write).
-            store = orders_pair_store(spark, wh)
-            _migrate_orders_pair(spark, wh, store)
-            store.commit([
+            # (crash-injection pinned in tests/test_pipeline.py). The
+            # commit is partition-scoped: a daily batch opens only the 1-2
+            # months its staged keys live in. It reads each staged frame
+            # twice (touched partitions, then the write).
+            orders_pair_store(spark, wh).commit([
                 (
                     "fact_orders",
                     once(merge.with_month_partition(staged_orders)),
@@ -496,10 +477,6 @@ def _merge_entity(spark: SparkSession, cfg: PipelineConfig, entity: str, ingest_
                     else merge.delete_reload(ex, st, ["order_id"]),
                 ),
             ])
-    finally:
-        for df in held:
-            # the checkpoint's blocks belong to the RDD its plan scans
-            df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def run_daily(spark: SparkSession, cfg: PipelineConfig, ingest_ts=None) -> dict:

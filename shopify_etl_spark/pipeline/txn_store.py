@@ -1,4 +1,5 @@
-"""Cross-table atomic publish: a manifest-pointer store for table PAIRS.
+"""Cross-table atomic publish: a manifest-pointer store whose commit is
+the package's one partition-scoped merge.
 
 The reference commits ``fact_orders`` + ``fact_order_items`` in ONE
 Postgres transaction (reference run_etl_with_retries.py:60-94;
@@ -12,21 +13,22 @@ This module closes it with the same discipline the streaming sketch
 store proved out (``streaming/sketch_stream.py``: stage invisibly, make
 ONE atomic rename the publish point), lifted to a multi-table commit —
 the snapshot-manifest idea table formats like Iceberg are built on,
-reduced to exactly what the orders entity needs:
+reduced to exactly what the orders entity needs. The batch runner commits
+the orders pair through it, and the streaming order feed commits each
+micro-batch of ``fact_orders`` the same way:
 
 * **Data files are immutable.** Each commit writes the partitions it
   touches into a fresh generation directory
   ``data/<table>/g<version>/<part>=<value>/``; nothing ever rewrites in
   place.
 * **A version manifest maps (table, partition) → generation.** Untouched
-  partitions keep their old generation entry, so a daily batch still
-  writes only the 1-2 month partitions it touches — the 100 TB shape of
-  the partition-scoped merge is preserved, byte-identical untouched
-  files and all (pinned in tests/test_pipeline.py).
+  partitions keep their old generation entry, so a daily batch writes
+  only the 1-2 month partitions it touches — the 100 TB shape, with
+  untouched files byte-identical (pinned in tests/test_pipeline.py).
 * **Publish is ONE file rename** of the staged manifest
-  ``versions/_tmp.v<N>.json`` → ``versions/v<N>.json``, covering BOTH
-  tables. Readers resolve the highest committed manifest; at every
-  instant they see a consistent (orders, items) pair: the old pair
+  ``versions/_tmp.v<N>.json`` → ``versions/v<N>.json``, covering every
+  table of the commit. Readers resolve the highest committed manifest;
+  at every instant they see a consistent (orders, items) pair: the old pair
   before the rename, the new pair after, never a mix. A crash anywhere
   before the rename leaves only invisible staging (orphan generations,
   swept by the next commit's GC); a crash after it leaves a committed
@@ -43,6 +45,10 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 
 NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # Spark/Hive's null dir name
+# How many committed versions stay readable: current + one back, enough
+# for time-travel diffing and for ROLLBACK after a bad batch, while GC
+# still reclaims superseded data promptly.
+RETAIN_VERSIONS = 2
 
 
 def _encode_partition(value) -> str:
@@ -56,23 +62,13 @@ class PairStore:
     ``data/<table>/g<N>/`` generation dirs. ``partition_col`` is the
     physical partition column every member table shares (the orders pair:
     ``created_month``, immutable per row, so keys never migrate across
-    partitions — the same precondition the partition-scoped merge had).
+    partitions — the precondition of any partition-scoped merge).
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        partition_col: str,
-        retain_versions: int = 2,
-    ):
+    def __init__(self, spark: SparkSession, root: str, partition_col: str):
         self.spark = spark
         self.root = root
         self.partition_col = partition_col
-        # How many committed versions stay readable. 2 = current + one
-        # back: enough for time-travel diffing and for ROLLBACK after a
-        # bad batch, while GC still reclaims superseded data promptly.
-        self.retain_versions = max(1, retain_versions)
 
     # -- filesystem plumbing -------------------------------------------------
 
@@ -105,9 +101,6 @@ class PairStore:
         vs = self._committed_versions()
         return vs[-1] if vs else 0
 
-    def exists(self) -> bool:
-        return self.current_version() > 0
-
     def manifest(self, version: int | None = None) -> dict:
         from .runner import fs_read_text
 
@@ -120,7 +113,7 @@ class PairStore:
         if raw is None:
             raise FileNotFoundError(
                 f"PairStore: version {v} is not retained at {self.root} "
-                f"(retain_versions={self.retain_versions}; available: "
+                f"(RETAIN_VERSIONS={RETAIN_VERSIONS}; available: "
                 f"{self._committed_versions()})"
             )
         return json.loads(raw)
@@ -130,51 +123,30 @@ class PairStore:
     def read_table(self, table: str, version: int | None = None) -> DataFrame | None:
         """The table's committed state, partition column included —
         current by default, or AS OF a retained ``version`` (time
-        travel; the last ``retain_versions`` manifests and every data
-        directory they reference survive GC).
+        travel; the last ``RETAIN_VERSIONS`` manifests and every data
+        directory they reference survive GC)."""
+        return self._read(table, self.manifest(version)["tables"].get(table) or {})
 
-        Reads exactly the (generation, partition) directories the
-        manifest lists — never a whole generation dir, which may hold
-        partitions superseded by later commits but not yet swept.
+    def _read(self, table: str, entries: dict, schema=None) -> DataFrame | None:
+        """The rows of the ``entries`` (partition → generation) of
+        ``table``; None if there are none. A known ``schema`` skips the
+        schema-inference job (the commit's merge input).
+
+        Reads exactly the (generation, partition) directories listed —
+        never a whole generation dir, which may hold partitions
+        superseded by later commits but not yet swept.
         """
-        entries = self.manifest(version)["tables"].get(table)
-        if not entries:
-            return None
         by_gen: dict[str, list[str]] = {}
         for part_key, gen in entries.items():
             by_gen.setdefault(gen, []).append(part_key)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         frames = []
         for gen, part_keys in sorted(by_gen.items()):
             base = self._gen_dir(table, gen)
-            paths = [
-                f"{base}/{self.partition_col}={k}" for k in sorted(part_keys)
-            ]
-            frames.append(
-                self.spark.read.option("basePath", base).parquet(*paths)
-            )
-        df = frames[0]
-        for f in frames[1:]:
-            df = df.unionByName(f)
-        return df
-
-    def _read_partitions(self, table: str, part_keys: set[str], schema) -> DataFrame | None:
-        """Current rows of just the given partitions (the merge input),
-        read with the table's known ``schema`` (no inference job)."""
-        entries = self.manifest()["tables"].get(table) or {}
-        hits = {k: g for k, g in entries.items() if k in part_keys}
-        if not hits:
+            paths = [f"{base}/{self.partition_col}={k}" for k in sorted(part_keys)]
+            frames.append(reader.option("basePath", base).parquet(*paths))
+        if not frames:
             return None
-        by_gen: dict[str, list[str]] = {}
-        for k, g in hits.items():
-            by_gen.setdefault(g, []).append(k)
-        frames = []
-        for gen, keys in sorted(by_gen.items()):
-            base = self._gen_dir(table, gen)
-            frames.append(
-                self.spark.read.schema(schema).option("basePath", base).parquet(
-                    *[f"{base}/{self.partition_col}={k}" for k in sorted(keys)]
-                )
-            )
         df = frames[0]
         for f in frames[1:]:
             df = df.unionByName(f)
@@ -200,11 +172,10 @@ class PairStore:
         ``updates`` is a list of ``(table, staged_df, merge_fn)``;
         ``merge_fn(existing_or_None, staged) -> merged`` receives the
         current rows of ONLY the partitions the staged batch touches
-        (partition-scoped, like ``merge.upsert_partitioned``) and returns
-        the new state of those partitions. ``staged_df`` must carry
-        ``partition_col`` and have the table's schema; it is read twice
-        (touched partitions, then the write), so callers pass it
-        materialized.
+        (the partition-scoped merge) and returns the new state of those
+        partitions. ``staged_df`` must carry ``partition_col`` and have
+        the table's schema; it is read twice (touched partitions, then
+        the write), so callers pass it materialized.
 
         Crash contract: every write before the final rename lands in
         fresh generation dirs no committed manifest references — a crash
@@ -225,7 +196,12 @@ class PairStore:
                 for r in staged.select(self.partition_col).distinct().collect()
             ]
             touched = {_encode_partition(v) for v in touched_vals}
-            existing = self._read_partitions(table, touched, staged.schema)
+            current = man["tables"].get(table) or {}
+            existing = self._read(
+                table,
+                {k: g for k, g in current.items() if k in touched},
+                staged.schema,
+            )
             if existing is not None:
                 merged = merge_fn(existing, staged.select(*existing.columns))
             else:
@@ -305,7 +281,7 @@ class PairStore:
         commit's sweep)."""
         fs, vp = self._fs(self._versions_dir())
         current = manifest["version"]
-        floor = current - self.retain_versions + 1
+        floor = current - RETAIN_VERSIONS + 1
         for st in fs.listStatus(vp):
             name = st.getPath().getName()
             if name.startswith("_tmp."):

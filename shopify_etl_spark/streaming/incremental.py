@@ -9,8 +9,9 @@ semantics map 1:1 onto Structured Streaming:
 * daily cron trigger                          →  ``Trigger.AvailableNow``
 
 ``stream_upsert_orders`` is the production shape: JSONL landing dir →
-flatten → dedup-within-batch → keyed upsert per micro-batch, exactly-once
-via checkpoint + idempotent merge.
+flatten → dedup-within-batch → keyed upsert per micro-batch, committed
+through the batch runner's manifest store (``pipeline.txn_store``),
+exactly-once via checkpoint + idempotent merge.
 """
 
 from __future__ import annotations
@@ -19,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import flatten, merge
+from ..pipeline.runner import computed_once
+from ..pipeline.txn_store import PairStore
 from ..schemas import NODE_SCHEMAS
 
 
@@ -48,9 +51,15 @@ def stream_upsert_orders(
 
     Per micro-batch: flatten → latest-per-key within the batch (a batch
     can carry several versions of one order) → keyed upsert into the
-    target. The upsert is idempotent, so checkpoint replays after a crash
-    converge to the same table — the streaming analog of the reference's
-    lookback + ON CONFLICT design (daily_scheduler.py:75-81).
+    target, committed through the same manifest store as the batch
+    runner's orders pair (``PairStore``, table ``fact_orders`` under
+    ``target_dir``; read it back with ``PairStore.read_table``). A
+    micro-batch touches only the month partitions its keys live in, and
+    one manifest rename publishes it, so a crash mid-batch leaves readers
+    on the previous version. The upsert is idempotent, so checkpoint
+    replays after a crash converge to the same table — the streaming
+    analog of the reference's lookback + ON CONFLICT design
+    (daily_scheduler.py:75-81).
 
     No ``withWatermark`` here: watermarks only affect stateful operators
     (aggregations, dedup, stream-stream joins), and a foreachBatch sink
@@ -65,17 +74,14 @@ def stream_upsert_orders(
 
     def merge_batch(batch: DataFrame, _epoch: int) -> None:
         staged = merge.latest_per_key(batch, "order_id", "updated_at", "order_number")
-        # Partition-scoped merge, same as the batch runner: a micro-batch
-        # touches only the month partitions its keys live in — the target
-        # never gets a full-table rewrite per trigger (created_at is
-        # immutable per order, so keys can't move across partitions).
-        merge.upsert_partitioned(
-            batch.sparkSession,
-            target_dir,
-            merge.with_month_partition(staged),
-            "order_id",
-            "created_month",
-        )
+        # same commit as the batch runner's (created_at is immutable per
+        # order, so keys can't move across partitions)
+        with computed_once() as once:
+            PairStore(batch.sparkSession, target_dir, "created_month").commit([(
+                "fact_orders",
+                once(merge.with_month_partition(staged)),
+                lambda ex, st: st if ex is None else merge.upsert(ex, st, "order_id"),
+            )])
 
     return (
         orders.writeStream.foreachBatch(merge_batch)

@@ -137,88 +137,3 @@ def test_snapshot_rows_idempotent_key(spark):
     two_days = merge.upsert(snap, merge.snapshot_rows(inv, "2025-11-29"),
                             ["sku", "snapshot_date"])
     assert two_days.count() == 2  # next day appends
-
-
-def test_upsert_partitioned_touches_only_staged_partitions(spark, tmp_path):
-    import os
-
-    path = str(tmp_path / "fact")
-    base = spark.createDataFrame(
-        [(1, "2025-01", "a"), (2, "2025-01", "b"), (3, "2025-02", "c"), (4, "2025-03", "d")],
-        ["k", "month", "v"],
-    )
-    merge.overwrite_partitions(base, path, "month")
-    jan_files = sorted(os.listdir(tmp_path / "fact" / "month=2025-01"))
-    mar_files = sorted(os.listdir(tmp_path / "fact" / "month=2025-03"))
-
-    staged = spark.createDataFrame(
-        [(3, "2025-02", "c2"), (5, "2025-02", "e")], ["k", "month", "v"]
-    )
-    touched = merge.upsert_partitioned(spark, path, staged, "k", "month")
-    assert touched == ["2025-02"]
-    # untouched partitions: identical files on disk
-    assert sorted(os.listdir(tmp_path / "fact" / "month=2025-01")) == jan_files
-    assert sorted(os.listdir(tmp_path / "fact" / "month=2025-03")) == mar_files
-
-    out = {r.k: (r.v, r.month) for r in spark.read.parquet(path).collect()}
-    assert out == {
-        1: ("a", "2025-01"), 2: ("b", "2025-01"),
-        3: ("c2", "2025-02"),  # updated in place
-        4: ("d", "2025-03"), 5: ("e", "2025-02"),  # inserted
-    }
-    # replay the same staged batch → identical table (idempotent)
-    merge.upsert_partitioned(spark, path, staged, "k", "month")
-    assert {r.k: (r.v, r.month) for r in spark.read.parquet(path).collect()} == out
-
-    # bootstrap path: nonexistent target
-    p2 = str(tmp_path / "fresh")
-    merge.upsert_partitioned(spark, p2, staged, "k", "month")
-    assert spark.read.parquet(p2).count() == 2
-
-
-def test_upsert_partitioned_migrates_legacy_unpartitioned_layout(spark, tmp_path):
-    """A warehouse written by the pre-partitioned engine (no partition
-    column, part-files at the table root) is migrated once: full merge,
-    atomic rewrite into partition dirs, no root files left behind
-    (ADVICE r3: AnalysisException + stranded legacy files)."""
-    import os
-
-    path = str(tmp_path / "fact")
-    legacy = spark.createDataFrame(
-        [(1, "2025-01-05", "a"), (2, "2025-02-10", "b")], ["k", "created_at", "v"]
-    )
-    legacy.write.parquet(path)  # unpartitioned: no 'month' column anywhere
-    assert any(f.startswith("part-") for f in os.listdir(path))
-
-    staged = spark.createDataFrame(
-        [(2, "2025-02-10", "b2"), (3, "2025-03-01", "c")], ["k", "created_at", "v"]
-    ).withColumn("month", F.substring("created_at", 1, 7))
-    touched = merge.upsert_partitioned(
-        spark, path, staged, "k", "month",
-        derive_partition=lambda df: df.withColumn(
-            "month", F.substring("created_at", 1, 7)
-        ),
-    )
-    assert touched == ["2025-01", "2025-02", "2025-03"]
-    # partitioned layout, and the legacy root part-files are GONE
-    root = os.listdir(path)
-    assert not any(f.startswith("part-") for f in root)
-    assert {f for f in root if f.startswith("month=")} == {
-        "month=2025-01", "month=2025-02", "month=2025-03"
-    }
-    out = {r.k: (r.v, r.month) for r in spark.read.parquet(path).collect()}
-    assert out == {
-        1: ("a", "2025-01"), 2: ("b2", "2025-02"), 3: ("c", "2025-03")
-    }
-    # subsequent runs take the normal pruned path
-    staged2 = spark.createDataFrame(
-        [(3, "2025-03-01", "c2")], ["k", "created_at", "v"]
-    ).withColumn("month", F.substring("created_at", 1, 7))
-    assert merge.upsert_partitioned(spark, path, staged2, "k", "month") == ["2025-03"]
-
-    # without a derivation, the mismatch is a clear error, not an
-    # AnalysisException inside the pruning filter
-    p2 = str(tmp_path / "fact2")
-    legacy.write.parquet(p2)
-    with pytest.raises(ValueError, match="legacy unpartitioned layout"):
-        merge.upsert_partitioned(spark, p2, staged, "k", "month")

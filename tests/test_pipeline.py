@@ -240,51 +240,40 @@ def test_orders_pair_commit_is_atomic_across_tables(
     assert items.join(fact, "order_id", "left_anti").count() == 0
 
 
-def test_orders_pair_migrates_plain_layout(spark, tmp_path, fixture_paths):
-    """A warehouse written by the pre-store engine (plain fact_orders /
-    fact_order_items parquet dirs) migrates itself on the next orders
-    merge: version 1 = the adopted snapshot, the daily batch lands on
-    top, and the plain dirs are swept after the publish."""
-    from pathlib import Path
-
-    from pyspark.sql import functions as SF
-
-    cfg = _cfg(tmp_path, fixture_paths)
-    res = run_daily(spark, cfg, ingest_ts="2025-11-28 06:00:00")
-    assert all(res["merge"].values())
-    wh = cfg.warehouse_dir
-
-    # demote the store back to a plain layout (the legacy engine's output)
+def test_inventory_survives_a_crash_inside_the_swap(spark, tmp_path, fixture_paths):
+    """A crash between atomic_overwrite's two renames leaves
+    fact_current_inventory only in its ``._old`` sibling. The next run
+    must put it back and upsert into it, ending with the inventory of
+    the same two days run without the crash — not only the SKUs the
+    second day delivered."""
+    import random
     import shutil
 
-    plain_orders = _read(spark, wh, "fact_orders").drop("created_month")
-    plain_items = _read(spark, wh, "fact_order_items").drop("created_month")
-    plain_orders.write.mode("overwrite").parquet(f"{wh}/_po")
-    plain_items.write.mode("overwrite").parquet(f"{wh}/_pi")
-    expect_orders = sorted(map(tuple, plain_orders.collect()))
-    shutil.rmtree(f"{wh}/orders_txn")
-    shutil.move(f"{wh}/_po", f"{wh}/fact_orders")
-    shutil.move(f"{wh}/_pi", f"{wh}/fact_order_items")
+    from tests.shopify_fixtures import gen_product, write_envelope
 
-    # day-2 run: migration + batch, one store, plain dirs gone
-    cfg.raw_paths = dict(cfg.raw_paths)
-    cfg.raw_paths["retail_orders"] = str(fixture_paths["retail_orders_b2"])
-    cfg.raw_paths["wholesale_orders"] = str(fixture_paths["wholesale_orders_b2"])
-    res2 = run_daily(spark, cfg, ingest_ts="2025-11-29 06:00:00")
-    assert res2["merge"]["orders"] is True
-    assert not Path(f"{wh}/fact_orders").exists()
-    assert not Path(f"{wh}/fact_order_items").exists()
-    fact = _read(spark, wh, "fact_orders")
-    assert fact.count() == 100
-    # every pre-migration row not re-delivered on day 2 survived unchanged
-    updated = {f"R-{i}" for i in range(8)} | {f"W-{5000 + i}" for i in range(8)}
-    expect_kept = sorted(t for t in expect_orders if t[0] not in updated)
-    kept_ids = [t[0] for t in expect_kept]
-    kept = sorted(
-        map(tuple, fact.drop("created_month")
-            .filter(SF.col("order_id").isin(kept_ids)).collect())
-    )
-    assert kept == expect_kept
+    shared = [f"SHARED-{i}" for i in range(5)]
+    rng = random.Random(3)
+    day2 = {
+        f"{store}_products": str(write_envelope(
+            tmp_path / "raw" / store / "products_d2.json", store, "products",
+            [gen_product(rng, base + i, shared) for i in range(3)],
+        ))
+        for store, base in (("retail", 0), ("wholesale", 5000))
+    }
+
+    def two_days(root, crash):
+        products = ("retail_products", "wholesale_products")
+        cfg = _cfg(root, fixture_paths, raw_paths={k: str(fixture_paths[k]) for k in products})
+        assert run_daily(spark, cfg, ingest_ts="2025-11-28 06:00:00")["merge"] == {"products": True}
+        inv = f"{cfg.warehouse_dir}/fact_current_inventory"
+        if crash:
+            shutil.move(inv, f"{inv}._old")  # the state a crash between the renames leaves
+        cfg.raw_paths, cfg.snapshot_date = day2, "2025-11-29"
+        assert run_daily(spark, cfg, ingest_ts="2025-11-29 06:00:00")["merge"] == {"products": True}
+        return sorted(map(tuple, _read(spark, cfg.warehouse_dir, "fact_current_inventory").collect()))
+
+    expected = two_days(tmp_path / "clean", crash=False)
+    assert two_days(tmp_path / "crashed", crash=True) == expected
 
 
 def test_barrier_skips_merge_on_staging_failure(spark, tmp_path, fixture_paths):

@@ -1,12 +1,13 @@
 """PairStore model tests: a seeded random commit walk over a two-table
-store must match a plain-dict reference model after EVERY commit, and GC
-must keep exactly one live generation per (table, partition)."""
+store must match a plain-dict reference model after EVERY commit and
+after a replay of the last batch, and GC must keep exactly one live
+generation per (table, partition)."""
 
 import json
 from pathlib import Path
 
 from shopify_etl_spark.operators import merge
-from shopify_etl_spark.pipeline.txn_store import PairStore
+from shopify_etl_spark.pipeline.txn_store import RETAIN_VERSIONS, PairStore
 
 SCHEMA = "k long, v string, created_month string"
 
@@ -73,6 +74,14 @@ def test_random_commit_walk_matches_model(spark, tmp_path):
         assert _store_rows(store, "ta") == model_a, f"step {_step} ta"
         assert _store_rows(store, "tb") == model_b, f"step {_step} tb"
 
+    # replay: committing an already-applied batch again changes no row
+    store.commit([
+        ("ta", _df(spark, batch_a), _upsert),
+        ("tb", _df(spark, batch_b), _delete_reload),
+    ])
+    assert _store_rows(store, "ta") == model_a, "replay ta"
+    assert _store_rows(store, "tb") == model_b, "replay tb"
+
     # GC invariant: on-disk (generation, partition) dirs are exactly the
     # union of what the RETAINED manifests reference — nothing more.
     retained = [store.manifest(), store.manifest(store.current_version() - 1)]
@@ -89,10 +98,10 @@ def test_random_commit_walk_matches_model(spark, tmp_path):
             for k, g in man["tables"].get(table, {}).items()
         }
         assert on_disk == live, table
-    # exactly retain_versions committed manifests survive
+    # exactly RETAIN_VERSIONS committed manifests survive
     versions = sorted((tmp_path / "pair" / "versions").glob("v*.json"))
-    assert len(versions) == 2
-    assert json.loads(versions[-1].read_text())["version"] == 6
+    assert len(versions) == RETAIN_VERSIONS == 2
+    assert json.loads(versions[-1].read_text())["version"] == 7
 
 
 def test_time_travel_and_rollback(spark, tmp_path):
@@ -106,7 +115,7 @@ def test_time_travel_and_rollback(spark, tmp_path):
     good = _store_rows(store, "t")
     store.commit([("t", _df(spark, [(1, "BAD", "2025-01")]), _upsert)])
     assert _store_rows(store, "t") == {1: ("BAD", "2025-01")}
-    # time travel: version 1 still resolves under retain_versions=2
+    # time travel: version 1 still resolves under RETAIN_VERSIONS = 2
     assert {
         r["k"]: (r["v"], r["created_month"])
         for r in store.read_table("t", version=1).collect()
