@@ -23,17 +23,8 @@ Determinism: init picks the k rows with the smallest ``xxhash64(id)``
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: Wall-seconds of the most recent ``kmeans_fit`` in this process:
-#: ``[init_secs, iter1_secs, ...]``. Bench surfaces it so an iterative
-#: query's regression decomposes into init vs per-pass cost instead of
-#: one opaque number (VERDICT r3 item 4).
-LAST_FIT_TIMINGS: list[float] = []
-
 
 def _assign_partials(vec_col: str, id_col: str, centroids):
     """mapInPandas stage: argmax-cosine assignment + per-cluster partial
@@ -91,7 +82,6 @@ def kmeans_fit(
     (``kmeans_fixed_init_clusters``). Both are reproducible; only
     ``"id"`` is expressible without Spark's hash.
     """
-    t0 = time.time()
     order = (
         F.xxhash64(F.col(id_col), F.lit(seed)) if init_by == "hash"
         else F.col(id_col)
@@ -103,7 +93,6 @@ def kmeans_fit(
         .limit(k)
         .collect()
     )
-    LAST_FIT_TIMINGS[:] = [round(time.time() - t0, 3)]
     if not init:
         raise ValueError(
             "kmeans_fit: empty corpus — nothing to seed centroids from"
@@ -114,7 +103,6 @@ def kmeans_fit(
     partial_schema = "cid int, n long, vsum array<double>, sim_sum double"
     dim = len(centroids[0])
     for _ in range(iters):
-        t0 = time.time()
         partials = src.mapInPandas(
             _assign_partials(vec_col, id_col, centroids), partial_schema
         )
@@ -139,7 +127,6 @@ def kmeans_fit(
         history.append(total_sim / total_n)
         for cid, r in rows.items():
             centroids[cid] = [s / r["n"] for s in r["vsum"]]
-        LAST_FIT_TIMINGS.append(round(time.time() - t0, 3))
     return centroids, history
 
 

@@ -101,9 +101,10 @@ def shingle_postings(
     columnar InMemoryRelation build plus per-consumer full-plan
     re-analysis measured 3.6-4.5x slower than checkpointed raw blocks on
     the driver's bench (BENCH_r17 vs r16, reproducing at 8 and 32
-    cores). A cluster deployment would materialize it as a staging
-    table; callers running several dedup ops over one corpus should
-    build this once and pass it to each (see bench.py).
+    cores; both records are at ``afb445c`` in git history). A cluster
+    deployment would materialize it as a staging table; callers running
+    several dedup ops over one corpus should build this once and pass it
+    to each.
     """
     return (
         _spread(df)
@@ -826,8 +827,7 @@ def _span_hash_windows(
     Lazily localCheckpointed: every caller feeds the spans to at least
     two consumers (explode + per-doc sizes / island pass). The span
     family accepts a prebuilt ``windows`` frame so a pipeline running
-    stats + intervals + trim over one corpus shingles it once
-    (bench.py times that shared stage as ``_stage:span_windows``).
+    stats + intervals + trim over one corpus shingles it once.
     """
     toks = tokens(text_col)
     return (

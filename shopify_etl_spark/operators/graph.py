@@ -97,8 +97,9 @@ def pagerank(
     # localCheckpoint, NOT persist (r18, reverting r17): the unrolled
     # iterations are many consumers of this frame, and each one's action
     # re-analyzes the FULL lineage under persist — measured 1.8x slower
-    # (pagerank_degree_capped, BENCH_r17 vs r16); the checkpoint
-    # truncates every iteration's plan at a Scan ExistingRDD stub
+    # (pagerank_degree_capped, BENCH_r17 vs r16 at afb445c); the
+    # checkpoint truncates every iteration's plan at a Scan ExistingRDD
+    # stub
     ed = sym.join(deg, "s").localCheckpoint(eager=False)
     nodes = ed.select(F.col("s").alias("node"), "deg").distinct()
     n = F.broadcast(nodes.agg(F.count(F.lit(1)).alias("n_nodes")))

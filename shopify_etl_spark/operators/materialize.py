@@ -11,9 +11,10 @@ implementation, restored. The r17 round swapped every site to
 (constructing the checkpointed Dataset calls ``queryExecution.toRdd``,
 which runs the analyzer/optimizer/physical-planning pipeline at query
 construction) was the dominant cost. The swap measurably LOST on the
-driver's own bench (BENCH_r17 vs r16: containment_dedup_pairs 4.5x,
-ngram_jaccard_pairs 3.6x, pagerank_degree_capped 1.8x, ivf_pq_search
-1.5x, residual_pq_search 1.7x slower — reproducing at 8 and 32 cores),
+driver's own bench (BENCH_r17 vs r16, at ``afb445c`` in git history:
+containment_dedup_pairs 4.5x, ngram_jaccard_pairs 3.6x,
+pagerank_degree_capped 1.8x, ivf_pq_search 1.5x, residual_pq_search
+1.7x slower — reproducing at 8 and 32 cores),
 for two mechanism reasons the r17 commit itself documented for
 ``duplicate_clusters`` and then did not apply elsewhere:
 
@@ -31,7 +32,7 @@ for two mechanism reasons the r17 commit itself documented for
 
 The checkpoint's build-time planning cost is real but second-order at
 both ends: per call it is O(plan) once, while persist pays O(plan) per
-consumer action; and the bench numbers above are the ground truth.
+consumer action; and the round-17 timings above are the ground truth.
 
 Subtrees whose recomputation would be NON-deterministic
 (RangePartitioner sampling, ``spark_partition_id`` layouts) must keep an

@@ -4,7 +4,8 @@ Every query here re-expresses an operator family from the reference
 (SURVEY.md §2, citations in each docstring) over the driver's deterministic
 testdata tables, paired with an ANSI-SQL oracle that DuckDB runs on the same
 parquet files. The driver hash-compares both sides at sf=0.01
-(CORRECTNESS_r{N}.json); ``bench.py`` times the same builders at sf=0.1.
+(CORRECTNESS_r{N}.json); ``tools/check_correctness.py`` runs the same
+comparison locally.
 
 Design rules (scale-first):
 

@@ -744,7 +744,7 @@ def train_eval_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # work), but this shape scans the documents table ONCE instead of
     # twice and materializes ONE posting checkpoint instead of two —
     # what matters when the scan is the expensive part (remote storage)
-    # or when other dedup ops share the same postings (bench.py does).
+    # or when other dedup ops share the same postings.
     postings = sampling.hash_split(
         dedup.shingle_postings(docs, n=3),
         "doc",

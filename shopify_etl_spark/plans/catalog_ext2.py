@@ -2435,8 +2435,7 @@ _LEAK_T = {
 def leakage_split_from(docs: DataFrame, comp: DataFrame) -> DataFrame:
     """The leakage-safe split over a PRECOMPUTED cluster assignment
     (``comp``: (doc, cluster_id)) — split out so a pipeline that already
-    clustered (and bench.py's shared-clusters family) charges the
-    clustering once."""
+    clustered charges the clustering once."""
     clusters = comp.withColumnRenamed("doc", "doc_id")
     keyed = (
         docs.select("doc_id")

@@ -1059,7 +1059,7 @@ def curriculum_mix_docs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def cluster_stats_from(docs: DataFrame, comp: DataFrame) -> DataFrame:
     """The dedup_cluster_stats rollup over a PRECOMPUTED cluster
-    assignment — split out so a pipeline (and bench.py) that already
+    assignment — split out so a pipeline that already
     clustered the corpus charges the clustering cost once and fans out,
     exactly like the shared shingle/span stages."""
     csize = comp.groupBy("cluster_id").agg(

@@ -54,14 +54,14 @@ def _pq_iter_sql(prev: str, assign: str, nxt: str, dsub: int) -> str:
         FROM sub p JOIN {prev} c ON c.j = p.j
       ) WHERE rn = 1
     ),
-    {nxt}_upd AS (
+    {nxt}_upd AS MATERIALIZED (
       SELECT j, cid, list(m ORDER BY i) AS c FROM (
         SELECT a.j, a.cid, t.i, SUM(a.s[t.i]) / COUNT(*) AS m
         FROM {assign} a CROSS JOIN range(1, {dsub + 1}) t(i)
         GROUP BY a.j, a.cid, t.i
       ) GROUP BY j, cid
     ),
-    {nxt} AS (
+    {nxt} AS MATERIALIZED (
       SELECT j, cid, c FROM {nxt}_upd
       UNION ALL
       SELECT pc.j, pc.cid, pc.c FROM {prev} pc
@@ -85,14 +85,14 @@ def _kmeans_mean_iter_sql(prev: str, assign: str, nxt: str, dim: int) -> str:
         FROM unit p CROSS JOIN {prev} c
       ) WHERE rn = 1
     ),
-    {nxt}_upd AS (
+    {nxt}_upd AS MATERIALIZED (
       SELECT cid, list(m ORDER BY i) AS c FROM (
         SELECT a.cid, t.i, SUM(a.u[t.i]) / COUNT(*) AS m
         FROM {assign} a CROSS JOIN range(1, {dim + 1}) t(i)
         GROUP BY a.cid, t.i
       ) GROUP BY cid
     ),
-    {nxt} AS (
+    {nxt} AS MATERIALIZED (
       SELECT cid, c FROM {nxt}_upd
       UNION ALL
       SELECT pc.cid, pc.c FROM {prev} pc
@@ -108,7 +108,7 @@ _SUB_FROM = (
 )
 
 _PQ_B0 = """
-    b0 AS (
+    b0 AS MATERIALIZED (
       SELECT j,
              CAST(row_number() OVER (PARTITION BY j ORDER BY vec_id)
                   AS INTEGER) - 1 AS cid,
@@ -204,7 +204,7 @@ def pq_adc_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # id init) -> final cell assignment + the 8 smallest-id queries' 2-cell
 # probes (same cosine geometry, ties on cid)
 _COARSE_SQL = f"""{_UNIT_CTE},
-    c0 AS (
+    c0 AS MATERIALIZED (
       SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INTEGER) - 1
                AS cid, u AS c
       FROM (SELECT vec_id, u FROM unit ORDER BY vec_id LIMIT 8)
@@ -218,8 +218,10 @@ _COARSE_SQL = f"""{_UNIT_CTE},
         FROM unit p CROSS JOIN c2 c
       ) WHERE rn = 1
     ),
-    q AS (SELECT vec_id AS query_id FROM unit ORDER BY vec_id LIMIT 8),
-    probes AS (
+    q AS MATERIALIZED (
+      SELECT vec_id AS query_id FROM unit ORDER BY vec_id LIMIT 8
+    ),
+    probes AS MATERIALIZED (
       SELECT query_id, cid FROM (
         SELECT q.query_id, c.cid,
                row_number() OVER (PARTITION BY q.query_id

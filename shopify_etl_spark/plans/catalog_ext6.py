@@ -382,7 +382,7 @@ def _opq_oracle() -> str:
       UNION ALL
       SELECT vec_id, t.j + 4, list_slice(ev, t.j * 16 + 1, t.j * 16 + 16)
       FROM permuted CROSS JOIN range(0, 4) t(j)
-    ), b0 AS (
+    ), b0 AS MATERIALIZED (
       SELECT j,
              CAST(row_number() OVER (PARTITION BY j ORDER BY vec_id)
                   AS INTEGER) - 1 AS cid,

@@ -33,7 +33,7 @@ true foreign decoder but catches the realistic divergence classes
 (transposed zigzag, Paeth tie-breaks, bit-replication off-by-ones,
 color-convert constants, EOB-run accounting — the reference itself had
 an EOB-refinement bug this differential exposed while being built).
-``tools/diff_gate.py`` records which backend ran.
+``HAVE_PIL`` records which backend ran.
 
 Paths NOT externally differentialed (documented, with reasons):
 arithmetic JPEG (no public Python package decodes SOF9 — that gap is

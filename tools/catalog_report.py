@@ -1,17 +1,15 @@
 """Generate CATALOG.md — the one-page inventory of every declared query.
 
-Merges three sources of truth into one table the reader can scan:
-the catalog registry (name, oracle kind, doc first-sentence), the last
-local bench record (BENCH_LOCAL.json best-warm seconds at sf0.1), and
-a live plan-feature pass (shuffles / broadcasts / sort-merges at
-sf0.001). Regenerate after adding queries::
+Merges two sources of truth into one table the reader can scan: the
+catalog registry (name, oracle kind, doc first-sentence) and a live
+plan-feature pass (shuffles / broadcasts / sort-merges at sf0.001).
+Regenerate after adding queries::
 
     python tools/catalog_report.py > CATALOG.md
 """
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import sys
@@ -32,13 +30,6 @@ def first_sentence(doc: str, limit: int = 110) -> str:
 
 
 def main() -> int:
-    bench = {}
-    try:
-        with open(os.path.join(os.path.dirname(__file__), "..", "BENCH_LOCAL.json")) as f:
-            bench = json.load(f).get("queries", {})
-    except FileNotFoundError:
-        pass
-
     spark = get_spark("catalog-report", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.maxMetadataStringLength", "4000")
@@ -57,9 +48,7 @@ def main() -> int:
         oracle = "full SQL" if spec.oracle else "rows-only (pytest-pinned)"
         if spec.oracle and ("TRUE AS" in spec.oracle):
             oracle = "guarantee-gate"
-        t = bench.get(name)
-        shown = f"{t:.2f}" if t is not None and t >= 0 else "—"
-        rows.append((name, oracle, feats, shown, first_sentence(spec.doc)))
+        rows.append((name, oracle, feats, first_sentence(spec.doc)))
     spark.stop()
 
     print("# CATALOG — every declared query\n")
@@ -68,13 +57,12 @@ def main() -> int:
           "the pipeline value-for-value), **guarantee-gate** (exact twins "
           "+ in-bounds flags for approximate ops), **rows-only** (pinned "
           "by pytest invariants instead). Plan column = shuffles / "
-          "broadcast-hash joins / sort-merge joins at sf0.001; seconds = "
-          "median of 3 runs at sf0.1 (BENCH_LOCAL.json).\n")
+          "broadcast-hash joins / sort-merge joins at sf0.001.\n")
     print(f"{len(rows)} queries.\n")
-    print("| query | oracle | plan | sf0.1 s | what it does |")
-    print("|---|---|---|---|---|")
-    for name, oracle, feats, t, doc in sorted(rows):
-        print(f"| `{name}` | {oracle} | {feats} | {t} | {doc} |")
+    print("| query | oracle | plan | what it does |")
+    print("|---|---|---|---|")
+    for name, oracle, feats, doc in sorted(rows):
+        print(f"| `{name}` | {oracle} | {feats} | {doc} |")
     return 0
 
 

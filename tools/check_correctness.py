@@ -48,13 +48,10 @@ def main() -> int:
 
     con = duckdb.connect()
     for t in TABLES:
-        # partial corpora (the scale_harness-built sf1 dir has only the
-        # tables its FAMILY queries read) register what exists; a query
-        # over a missing table fails loudly at run time on both engines
+        # register only the tables the corpus has; a query over a missing
+        # table fails loudly at run time on both engines
         path = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(path):  # Spark-written dataset (scale_harness sf1)
-            path = f"{path}/*.parquet"
-        elif not os.path.exists(path):
+        if not os.path.exists(path):
             continue
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
 
