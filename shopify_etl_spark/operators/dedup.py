@@ -414,7 +414,7 @@ def band_hashes(
     bands: int = 8,
 ) -> DataFrame:
     """(id, band, band_hash) rows — one 64-bit hash per signature band.
-    Shared by the batch pair generator and the streaming dedup state."""
+    Input of the LSH pair generator."""
     rows = num_perm // bands
     return signatures.select(
         id_col,

@@ -23,10 +23,9 @@ log-ratio table (≤ n_buckets rows) broadcasts back onto the token
 stream, so scoring is one broadcast-hash join plus a per-document sum
 (partial map-side, one small shuffle keyed by doc id).
 
-The model is also MERGEABLE: counts sum across disjoint batches, so an
-incremental stream can maintain it epoch-at-a-time exactly like the CMS
-sketch store (``streaming/selection_stream.py``) and scoring against
-the merged model equals scoring against a one-shot fit.
+The model is also MERGEABLE: counts sum across disjoint batches, so
+models fitted batch by batch add up, and scoring against the merged
+model equals scoring against a one-shot fit.
 
 No reference analog — the reference ETL has no content-based selection
 layer; this is part of the beyond-reference training-data surface
@@ -106,7 +105,7 @@ def dsir_score(
     per-doc sum partial-aggregates map-side.
 
     The join is a LEFT join: when the stream comes from a DIFFERENT
-    corpus than the model fit (the streaming-model use case), tokens
+    corpus than the model fit (a model merged from other batches), tokens
     can hash to buckets with no fitted row, and those must contribute
     the zero-count smoothed ratio log(α/(n_t+b)) − log(α/(n_r+b)) —
     dropping them (an inner join) would bias every cross-corpus weight

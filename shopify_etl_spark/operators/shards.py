@@ -86,32 +86,10 @@ SHARD_SCHEMA = StructType(
 def blob_checksum(blob: bytes) -> int:
     """Integrity checksum of a packed shard payload: Σ (id+1)·(pos+1)
     over the little-endian uint16 ids RE-READ from the bytes. ONE
-    definition shared by the packer and every validating reader (batch
-    and streaming) — the formula the SQL oracles mirror in closed
-    form."""
+    definition shared by the packer and every validating reader — the
+    formula the SQL oracles mirror in closed form."""
     rec = np.frombuffer(blob, dtype="<u2").astype(np.int64)
     return int(((rec + 1) * (np.arange(len(rec)) + 1)).sum())
-
-
-def train_vocab(
-    docs: DataFrame,
-    vocab_size: int = 256,
-    text_col: str = "text",
-) -> list[str]:
-    """The ranked vocabulary as a driver-side list (rank order = token
-    id): top ``vocab_size`` tokens by (term_freq desc, token asc). A
-    model-sized collect (V strings) — the frozen-model artifact the
-    streaming shard store persists, exactly the ranking
-    :func:`shard_token_stream` derives internally."""
-    rows = (
-        docs.select(F.explode(tokens(text_col)).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("_tf"))
-        .orderBy(F.desc("_tf"), F.asc("token"))
-        .limit(vocab_size)
-        .collect()
-    )
-    return [r["token"] for r in rows]
 
 
 def shard_token_stream(
@@ -122,7 +100,6 @@ def shard_token_stream(
     text_col: str = "text",
     id_col: str = "doc_id",
     group_col: str = "source",
-    vocab: list[str] | None = None,
     tokens_col: str | None = None,
 ) -> DataFrame:
     """One row per token occurrence with its shard address:
@@ -133,12 +110,6 @@ def shard_token_stream(
     prefix scan over per-doc token counts) + the in-doc index — no
     corpus-wide window, no corpus-sized join (positions ride the same
     checkpointed frame the vocabulary pass reads).
-
-    ``vocab`` (a rank-ordered token list, e.g. from
-    :func:`train_vocab`) uses a FROZEN vocabulary instead of deriving
-    one from this corpus — the streaming shard store's frozen-model
-    path: ids stay stable across epochs no matter how the batch
-    distribution moves.
 
     ``tokens_col`` (r16) feeds a PRE-TOKENIZED array column instead of
     whitespace-tokenizing ``text_col`` — the seam the subword (BPE)
@@ -158,33 +129,22 @@ def shard_token_stream(
     )
     from pyspark.sql import Window
 
-    if vocab is not None:
-        if len(vocab) > vocab_size:
-            raise ValueError(
-                f"frozen vocab has {len(vocab)} entries > vocab_size "
-                f"{vocab_size}"
-            )
-        vocab_df = docs.sparkSession.createDataFrame(
-            [(t, i) for i, t in enumerate(vocab)], "token string, tid long"
+    vocab = (
+        base.select(F.explode("_toks").alias("token"))
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("_tf"))
+        .orderBy(F.desc("_tf"), F.asc("token"))
+        .limit(vocab_size)
+        .select(
+            "token",
+            (
+                F.row_number().over(
+                    Window.orderBy(F.desc("_tf"), F.asc("token"))
+                )
+                - 1
+            ).cast("long").alias("tid"),
         )
-    else:
-        vocab_df = (
-            base.select(F.explode("_toks").alias("token"))
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("_tf"))
-            .orderBy(F.desc("_tf"), F.asc("token"))
-            .limit(vocab_size)
-            .select(
-                "token",
-                (
-                    F.row_number().over(
-                        Window.orderBy(F.desc("_tf"), F.asc("token"))
-                    )
-                    - 1
-                ).cast("long").alias("tid"),
-            )
-        )
-    vocab = vocab_df
+    )
     positions = (
         _prefix_start(base, id_col, group_col)
         .select(
@@ -375,7 +335,6 @@ def read_training_shards(
 __all__ = [
     "SHARD_SCHEMA",
     "blob_checksum",
-    "train_vocab",
     "shard_token_stream",
     "shard_blobs",
     "shard_manifest",

@@ -222,12 +222,12 @@ def hll_overlap(
     This is the "how selective is this join key" planner input that
     complements :func:`cms_inner_product`'s row-count estimate: CMS says
     how many PAIRS the join emits, this says how many KEYS participate.
-    Both sides' sketches are the same mergeable per-shard/streaming
-    aggregates the rest of the sketch layer maintains, so the answer
-    stays current without re-reading history. Inclusion–exclusion
-    amplifies the relative error of the union estimate when the overlap
-    is small — a known property of the construction, bounded by the
-    3·rsd slack the guarantee gate asserts on each term.
+    Both sides' sketches are the same mergeable per-shard aggregates
+    the rest of the sketch layer builds, so new batches merge in
+    without re-reading history. Inclusion–exclusion amplifies the
+    relative error of the union estimate when the overlap is small — a
+    known property of the construction, bounded by the 3·rsd slack the
+    guarantee gate asserts on each term.
     """
     sa = a.agg(F.hll_sketch_agg(key_col, F.lit(lg_k)).alias("ska"))
     sb = b.agg(F.hll_sketch_agg(key_col, F.lit(lg_k)).alias("skb"))
@@ -290,8 +290,8 @@ def bloom_build(
     Build is one scan: explode each key into its ``k`` hash positions
     (deterministic salted md5 — engine-portable, so the whole filter is
     SQL-oracle-checkable) and keep the distinct set. Mergeable by
-    construction: the union of two stores' position tables IS the filter
-    of their union — same epoch-store economics as CMS/HLL.
+    construction: the union of two position tables IS the filter of
+    their union — the same merge economics as CMS/HLL.
     """
     idx = F.explode(F.array(*[F.lit(i) for i in range(k)])).alias("_i")
     return (

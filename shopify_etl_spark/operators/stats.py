@@ -77,9 +77,8 @@ def value_histogram(
 ) -> DataFrame:
     """Fixed-range per-segment histogram ``(seg, bucket, n_sb)`` — the
     SUM-mergeable sufficient statistic for PSI: histograms over disjoint
-    batches add, so a streaming store can keep one per epoch
-    (``streaming/drift_stream.py``) and any window's drift score reads
-    from segments × buckets rows, never raw history."""
+    batches add, so any window's drift score reads from segments ×
+    buckets rows, never raw history."""
     b = F.least(
         F.greatest(
             F.floor((F.col(value_col) - F.lit(lo)) / F.lit(hi - lo) * n_buckets),
@@ -124,10 +123,11 @@ def psi_from_histogram(
 ) -> DataFrame:
     """PSI per segment from a ``(seg, bucket, n_sb)`` histogram — every
     total (segment sizes, population histogram, grand total) derives
-    from the histogram itself, so batch and streaming paths score
-    IDENTICALLY from the same merged counts. A histogram built with a
-    different bucket count than ``n_buckets`` raises in-plan
-    (:func:`_checked_bucket`) instead of silently skewing the score."""
+    from the histogram itself, so a one-shot histogram and one summed
+    over batches score IDENTICALLY from the same counts. A histogram
+    built with a different bucket count than ``n_buckets`` raises
+    in-plan (:func:`_checked_bucket`) instead of silently skewing the
+    score."""
     hist = hist.withColumn("bucket", _checked_bucket(n_buckets))
     hist = hist.localCheckpoint(eager=False)  # four consumers below
     seg_totals = hist.groupBy("seg").agg(F.sum("n_sb").alias("n_s"))
@@ -201,9 +201,9 @@ def psi_between_histograms(
     :func:`psi_from_histogram`'s segment-vs-population view.
 
     Both inputs are ``(seg, bucket, n_sb)`` histograms (from
-    :func:`value_histogram` or a streaming store read) — comparing
-    summaries, not raw rows, is what lets the baseline be a compacted
-    epoch store instead of retained history. Segments present on only
+    :func:`value_histogram`, or summed over batches) — comparing
+    summaries, not raw rows, is what lets the baseline be a kept
+    histogram instead of retained history. Segments present on only
     one side still score: the missing side smooths to the uniform
     add-``alpha`` distribution, which reads as maximal drift rather
     than a silent drop.

@@ -28,7 +28,8 @@ commits them in one transaction (run_etl_with_retries.py:60-94), so the
 pair publishes through the manifest store in ``txn_store.py`` — one
 atomic rename covers both tables, closing SURVEY §7.4 risk 1. That
 store's commit is the package's only partition-scoped merge; the
-streaming feed (``streaming/incremental.py``) commits through it too.
+streaming order feed (``streaming/incremental.py``) commits through it
+too.
 """
 
 from __future__ import annotations
@@ -424,7 +425,7 @@ def _merge_entity(spark: SparkSession, cfg: PipelineConfig, entity: str, ingest_
             # M6: keyed upsert; M7: delete+reload of child items (run_logs.txt:472-573).
             # A batch can re-deliver an order (pagination overlap mid-extraction,
             # multiple envelope files): dedupe staged rows to the latest version
-            # per key BEFORE merging, like the streaming twin does — otherwise
+            # per key BEFORE merging, like the streaming order feed does — otherwise
             # duplicate-key rows land in the warehouse.
             staged_orders = merge.latest_per_key(
                 staged("fact_orders"), "order_id", "updated_at", "order_number"

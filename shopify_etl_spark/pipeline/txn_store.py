@@ -9,10 +9,9 @@ beside stale items. The engine's per-table atomic renames
 the two table swaps left a mixed pair, with idempotent re-run as the
 only story (the divergence SURVEY §7.4 flagged as risk #1).
 
-This module closes it with the same discipline the streaming sketch
-store proved out (``streaming/sketch_stream.py``: stage invisibly, make
-ONE atomic rename the publish point), lifted to a multi-table commit —
-the snapshot-manifest idea table formats like Iceberg are built on,
+This module closes it by staging invisibly and making ONE atomic
+rename the publish point of a multi-table commit — the
+snapshot-manifest idea table formats like Iceberg are built on,
 reduced to exactly what the orders entity needs. The batch runner commits
 the orders pair through it, and the streaming order feed commits each
 micro-batch of ``fact_orders`` the same way:

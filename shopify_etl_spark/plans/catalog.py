@@ -3,9 +3,9 @@
 Every query here re-expresses an operator family from the reference
 (SURVEY.md §2, citations in each docstring) over the driver's deterministic
 testdata tables, paired with an ANSI-SQL oracle that DuckDB runs on the same
-parquet files. The driver hash-compares both sides at sf=0.01
-(CORRECTNESS_r{N}.json); ``tools/check_correctness.py`` runs the same
-comparison locally.
+parquet files. Both sides are hash-compared at sf=0.01 (the round-era
+CORRECTNESS_r{N}.json records are at 1814ba1 in git history);
+``tools/check_correctness.py`` runs the same comparison locally.
 
 Design rules (scale-first):
 
@@ -703,8 +703,8 @@ def token_explode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sess GROUP BY user_id, session_id
     """,
     doc="Gap-based sessionization (30-min inactivity) via lag + running sum "
-    "— the batch twin of Structured Streaming session windows "
-    "(session_window / applyInPandasWithState in streaming/). Microsecond-"
+    "— the same sessions Spark's session_window assigns "
+    "(session_window_counts). Microsecond-"
     "exact gap math (unix_micros) on both sides; one shuffle on user_id "
     "shared by both window functions.",
 )

@@ -777,9 +777,9 @@ def pca_top2_scores_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the click x purchase attribution join produce per user' answered "
     "from two width x depth summaries without touching either side — "
     "the estimate that decides broadcast-vs-shuffle and pair-explosion "
-    "guards before running purchase_click_asof. Grids are the SAME "
-    "mergeable sketches the streaming store maintains, so the estimate "
-    "stays current as batches land. Output: exact join size + flags "
+    "guards before running purchase_click_asof. Grids are mergeable "
+    "(cellwise sums), so the estimate stays current as batches land. "
+    "Output: exact join size + flags "
     "asserting est >= true (deterministic: collisions only add) and "
     "est <= true + (e/width)*Na*Nb. "
     "operators/sketches.py::cms_inner_product.",
@@ -852,8 +852,8 @@ def cms_join_size_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "HLL sketch algebra (|A∩B| = |A| + |B| − |A∪B|, union lossless on "
     "sketch state): the 'how many keys participate in this join' "
     "planner input complementing cms_join_size's pair count. Sketches "
-    "are the same mergeable per-shard aggregates the streaming store "
-    "maintains. Guarantee-gate oracle: each term within 3·rsd, the "
+    "are mergeable per-shard aggregates. Guarantee-gate oracle: each "
+    "term within 3·rsd, the "
     "inclusion-exclusion overlap within the summed term slack. "
     "operators/sketches.py::hll_overlap.",
 )
@@ -1204,8 +1204,7 @@ def dedup_cluster_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "population view). The epoch-microsecond midpoint split is exact "
     "integer arithmetic in both engines; after the two grouped counts "
     "everything is bounded by segments x buckets, and at scale the two "
-    "windows come from the streaming histogram store "
-    "(streaming/drift_stream.py) instead of raw history. "
+    "windows can be kept as summed histograms instead of raw history. "
     "operators/stats.py::psi_between_histograms.",
 )
 def psi_time_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -89,8 +89,8 @@ from .catalog_ext7 import _UNKNOWN_ENC_EVERY, _XT_LATIN_SQL
     "the extracted char mass from documents alone, so a front that "
     "feeds compressed bytes to extraction (garbled chars) or silently "
     "drops unknown-codec records (lost counts) hash-mismatches either "
-    "way. The same predicate guards _extracted, curate_archives, "
-    "curate_archives_mm and the language router. ONE shuffle beyond "
+    "way. The same predicate guards _extracted, crawl_multimodal_stats "
+    "and the language router. ONE shuffle beyond "
     "the synth grouping (the per-label aggregate). "
     "sources/warc.py::is_decoded,parse_record.",
 )

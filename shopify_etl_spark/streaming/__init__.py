@@ -1,44 +1,1 @@
-from .incremental import (  # noqa: F401
-    session_event_counts,
-    stream_nodes_jsonl,
-    stream_upsert_orders,
-    windowed_order_counts,
-)
-from .dedup_stream import stream_dedup_docs  # noqa: F401
-from .joins_stream import stream_click_purchase_join, stream_event_feed  # noqa: F401
-from .near_dedup_stream import read_deduped, stream_near_dedup_docs  # noqa: F401
-from .span_stream import read_span_stats, stream_span_screen  # noqa: F401
-from .probe_stream import (  # noqa: F401
-    compact_probe_store,
-    read_probe_drift,
-    rebuild_probe_store,
-    stream_probe_monitor,
-)
-from .shard_stream import (  # noqa: F401
-    compact_shard_store,
-    epoch_shards,
-    read_shard_store,
-    rebuild_shard_store,
-    stream_shard_export,
-)
-from .crawl_stream import (  # noqa: F401
-    compact_crawl_store,
-    curate_archives,
-    curate_archives_mm,
-    read_crawl_corpus,
-    stream_crawl_ingest,
-)
-from .index_stream import (  # noqa: F401
-    bq_thresholds,
-    compact_index_epochs,
-    hamming_topk_frame,
-    pq_books,
-    read_index_chunks,
-    read_index_manifest,
-    search_index_chunks,
-    search_index_hamming,
-    search_index_pq,
-    search_index_sq,
-    sq_grid,
-    stream_index_chunks,
-)
+from .incremental import stream_nodes_jsonl, stream_upsert_orders  # noqa: F401

@@ -1,10 +1,9 @@
-"""Structured Streaming twin of the incremental batch feed.
+"""Structured Streaming form of the incremental order feed.
 
 The reference is strictly micro-batch-by-cron (SURVEY.md §2.10), but its
-semantics map 1:1 onto Structured Streaming:
+feed maps onto Structured Streaming:
 
-* persisted ``source_updated_at`` watermark  →  ``withWatermark``
-* lookback window re-reading late updates    →  watermark delay
+* persisted ``source_updated_at`` watermark  →  checkpointed file offsets
 * idempotent keyed upsert absorbing replays  →  ``foreachBatch`` MERGE
 * daily cron trigger                          →  ``Trigger.AvailableNow``
 
@@ -64,8 +63,7 @@ def stream_upsert_orders(
     No ``withWatermark`` here: watermarks only affect stateful operators
     (aggregations, dedup, stream-stream joins), and a foreachBatch sink
     has none — late rows always reach the merge, which is the point (the
-    idempotent upsert absorbs them). The watermarked operators live in
-    ``windowed_order_counts`` and ``stateful.running_event_totals``.
+    idempotent upsert absorbs them).
 
     Returns the started query; callers ``awaitTermination()``.
     """
@@ -88,54 +86,4 @@ def stream_upsert_orders(
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def session_event_counts(
-    spark: SparkSession,
-    src_dir: str,
-    gap: str = "30 minutes",
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
-    """Event-time SESSION windows over a streaming feed — the streaming
-    twin of the batch ``sessionize_events`` gaps-and-islands query.
-
-    ``session_window`` state MERGES: windows extend while events keep
-    arriving within ``gap`` of the current bound, and a session only
-    finalizes (emits, in append mode) once the watermark passes its
-    close — unlike tumbling windows, the window set itself is data-
-    dependent per key. State per key is one open window, bounded by the
-    watermark, so a hot user costs O(1) state, not O(events).
-    """
-    from .joins_stream import stream_event_feed
-
-    feed = stream_event_feed(spark, src_dir)
-    return (
-        feed.withWatermark("ts", watermark_delay)
-        .groupBy(F.col("user_id"), F.session_window("ts", gap))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def windowed_order_counts(
-    spark: SparkSession, src_dir: str, watermark_delay: str = "2 days"
-) -> DataFrame:
-    """Watermarked tumbling-window aggregate (orders per day) — the
-    streaming twin of the daily snapshot (M5 / SURVEY §2.10). Late rows
-    beyond the watermark are dropped by the engine instead of silently
-    double-counting."""
-    nodes = stream_nodes_jsonl(spark, src_dir, "orders")
-    ts = F.col("node").getField("updatedAt").cast("timestamp")
-    return (
-        nodes.select(ts.alias("updated_at"))
-        .withWatermark("updated_at", watermark_delay)
-        .groupBy(F.window("updated_at", "1 day").alias("day"))
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .select(F.col("day.start").alias("day_start"), "n_orders")
     )

@@ -117,7 +117,7 @@ def test_novelty_bounds_and_first_doc_is_fully_novel(spark, docs):
     cut=st.integers(0, 40),
 )
 def test_mergeable_states_are_split_invariant(spark, tokens, cut):
-    """The property every epoch store relies on: fitting per-batch and
+    """The mergeability property: fitting per-batch and
     merging EQUALS fitting the whole history, for ANY split point —
     CMS grids (cellwise sum) and DSIR models (bucket-keyed sum)."""
     from pyspark.sql import functions as F

@@ -1,75 +1,8 @@
-"""Stateful-streaming state persistence + salted-join equivalence."""
-
-import json
+"""Salted-join equivalence."""
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from shopify_etl_spark.operators.skew import salted_join
-from shopify_etl_spark.streaming.stateful import running_event_totals
-
-EVENT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType(), True),
-        StructField("ts", TimestampType(), True),
-        StructField("value", LongType(), True),
-    ]
-)
-
-
-def _write_events(path, rows):
-    path.parent.mkdir(parents=True, exist_ok=True)
-    path.write_text(
-        "\n".join(
-            json.dumps({"user_id": u, "ts": ts, "value": v}) for u, ts, v in rows
-        )
-    )
-
-
-def _run_stream(spark, src, ckpt, qname):
-    # foreachBatch, not the memory sink: memory-sink queries refuse to
-    # recover from an existing checkpoint, and checkpoint recovery is
-    # exactly what this test exercises.
-    captured = []
-
-    def collect_batch(batch, _epoch):
-        captured.extend(batch.collect())
-
-    stream = spark.readStream.schema(EVENT_SCHEMA).json(str(src))
-    q = (
-        running_event_totals(stream)
-        .writeStream.foreachBatch(collect_batch)
-        .outputMode("update")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return {r.user_id: (r.n_events, r.last_ts) for r in captured}
-
-
-def test_state_survives_restart(spark, tmp_path):
-    src, ckpt = tmp_path / "src", tmp_path / "ckpt"
-    _write_events(
-        src / "b1.jsonl",
-        [(1, "2024-01-01T10:00:00", 1), (1, "2024-01-01T10:05:00", 2),
-         (2, "2024-01-01T09:00:00", 3)],
-    )
-    out1 = _run_stream(spark, src, ckpt, "st1")
-    assert out1[1][0] == 2 and out1[2][0] == 3 - 2  # u1: 2 events, u2: 1 event
-
-    # second batch + NEW query on the SAME checkpoint: state restored,
-    # counts are cumulative across the restart
-    _write_events(src / "b2.jsonl", [(1, "2024-01-01T11:00:00", 4), (3, "2024-01-01T12:00:00", 5)])
-    out2 = _run_stream(spark, src, ckpt, "st2")
-    assert out2[1][0] == 3  # 2 from before restart + 1 new
-    assert out2[3][0] == 1
-    assert out2[1][1].hour == 11  # last_ts advanced
 
 
 def test_salted_join_equals_plain_join(spark):

@@ -208,39 +208,6 @@ def test_resize_images_fixed_raster_and_reference_math(spark):
         resize_images(assets_from_documents(docs), fake=False).collect()
 
 
-def test_stream_static_enrichment(spark, tmp_path):
-    """Stream-static join: a streaming doc feed enriched from a static
-    dimension (broadcast per micro-batch, no state)."""
-    import json
-    from pyspark.sql import Row, functions as F
-    from shopify_etl_spark.streaming import stream_dedup_docs
-
-    src = tmp_path / "feed"
-    src.mkdir()
-    (src / "b.jsonl").write_text(
-        "\n".join(
-            json.dumps(
-                {"doc_id": i, "text": f"text {i}", "ingested_at": "2024-05-01T10:00:00.000Z"}
-            )
-            for i in range(4)
-        )
-    )
-    dim = spark.createDataFrame(
-        [Row(doc_id=i, category="even" if i % 2 == 0 else "odd") for i in range(4)]
-    )
-    enriched = stream_dedup_docs(spark, str(src)).join(F.broadcast(dim), "doc_id")
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("enriched_docs")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r.doc_id: r.category for r in spark.sql("SELECT * FROM enriched_docs").collect()}
-    assert got == {0: "even", 1: "odd", 2: "even", 3: "odd"}
-
-
 def test_decode_raster_pillow_failure_falls_back(monkeypatch):
     """With Pillow importable but unable to decode the bytes, the built-in
     PNG codec must still decode png payloads, and non-png formats must

@@ -706,38 +706,6 @@ class TestEncodingRouting:
         with pytest.raises(ValueError, match="http_variants"):
             W.synth_warc_files(docs, unknown_encoding_every=9)
 
-    def test_extraction_front_routes_out_and_counts(self, spark):
-        # the streaming front: undecoded records become accounting rows
-        # (keep=false, reasons='transport:br'), decoded ones curate
-        from shopify_etl_spark.streaming.crawl_stream import (
-            curate_archives,
-            curate_archives_mm,
-        )
-
-        words = " ".join(
-            ["the", "a", "of"] + [f"w{i}" for i in range(30)]
-        )
-        docs = spark.createDataFrame(
-            [(5, words), (6, words), (14, words)],
-            "doc_id long, text string",
-        )
-        files = W.synth_warc_files(
-            docs, docs_per_file=25, http_variants=True,
-            unknown_encoding_every=9,
-        ).select("file_id", "warc")
-        out = {r["doc_id"]: r for r in curate_archives(files).collect()}
-        assert set(out) == {5, 6, 14}
-        assert out[6].keep is False
-        assert out[6].reasons == "transport:br"
-        assert out[6].text_out is None
-        assert out[5].keep and out[14].keep  # 5%9=5, 14%9=5: decoded
-        mm = {
-            r["doc_id"]: r for r in curate_archives_mm(files).collect()
-        }
-        assert mm[6].modality == "other"
-        assert mm[6].reasons == "transport:br"
-        assert mm[5].modality == "text" and mm[5].keep
-
 
 class TestAttributeAwareTags:
     """Round-16: the rule-3/4 tag regexes are quoted-attribute-aware —
@@ -1047,41 +1015,9 @@ class TestSitemapSynth:
 
 
 class TestR17AdviceFixes:
-    """Round-17 ADVICE closures: null-MIME records must not silently
-    vanish from the multimodal router, outlinks must cover all three
-    HTML attribute-value forms, and revisit resolution must not fan
-    out on duplicate payload digests."""
-
-    def test_mm_null_mime_routes_to_accounting(self, spark):
-        # a 200-OK response with NO Content-Type header: http_mime is
-        # null, and a bare startswith() makes every route predicate
-        # NULL — the row must land in the 'other' accounting route
-        # with reasons='mime:?', never vanish
-        from shopify_etl_spark.streaming.crawl_stream import (
-            curate_archives_mm,
-        )
-
-        http = b"HTTP/1.1 200 OK\r\nContent-Length: 5\r\n\r\nhello"
-        rec = W.build_record(
-            "response",
-            [
-                ("WARC-Record-ID", "<urn:uuid:nomime-1>"),
-                ("WARC-Target-URI", "http://h.example/doc/7"),
-                ("Content-Type", "application/http; msgtype=response"),
-            ],
-            http,
-        )
-        files = spark.createDataFrame(
-            [(0, bytearray(W.gzip_member(rec)))],
-            "file_id long, warc binary",
-        )
-        rows = curate_archives_mm(files).collect()
-        assert len(rows) == 1
-        r = rows[0]
-        assert r.doc_id == 7
-        assert r.modality == "other"
-        assert r.keep is False
-        assert r.reasons == "mime:?"
+    """Round-17 ADVICE closures: outlinks must cover all three HTML
+    attribute-value forms, and revisit resolution must not fan out on
+    duplicate payload digests."""
 
     def test_outlinks_cover_all_attribute_forms(self, spark):
         page = (
@@ -1307,8 +1243,7 @@ class TestTransportDecoderRegistry:
 
 class TestRedirects:
     """Round-17 (VERDICT r16 #2): 3xx legs with Location headers —
-    synthesis shapes, parser surfacing, and the curation fronts'
-    status accounting."""
+    synthesis shapes and parser surfacing."""
 
     def test_synth_redirect_legs_and_location_header(self, spark):
         # doc 5: 5%11==5 (1-hop) and 5%33==5 (2-hop); doc 16: loop;
@@ -1345,33 +1280,6 @@ class TestRedirects:
         docs = spark.createDataFrame([(1, "t")], "doc_id long, text string")
         with pytest.raises(ValueError, match="rich_uris"):
             W.synth_warc_files(docs, redirects=True)
-
-    def test_curation_fronts_account_redirects(self, spark):
-        from shopify_etl_spark.streaming.crawl_stream import (
-            curate_archives,
-            curate_archives_mm,
-        )
-
-        words = " ".join(["the", "a", "of"] + [f"w{i}" for i in range(30)])
-        docs = spark.createDataFrame(
-            [(5, words)], "doc_id long, text string"
-        )
-        files = W.synth_warc_files(
-            docs, docs_per_file=50, rich_uris=True, redirects=True
-        ).select("file_id", "warc")
-        out = curate_archives(files).collect()
-        by_reason = {r.reasons: r for r in out if not r.keep}
-        kept = [r for r in out if r.keep]
-        assert len(kept) == 1 and kept[0].doc_id == 5  # the content page
-        assert "status:301" in by_reason   # /r leg
-        assert "status:302" in by_reason   # /rr leg
-        assert by_reason["status:301"].text_out is None
-        mm = curate_archives_mm(files).collect()
-        mm_reasons = sorted(
-            r.reasons for r in mm if r.modality == "other"
-        )
-        assert mm_reasons == ["status:301", "status:302"]
-        assert [r.doc_id for r in mm if r.modality == "text"] == [5]
 
 
 class TestRequestPairing:

@@ -35,6 +35,16 @@ def canon(val) -> str:
     return str(val)
 
 
+# DuckDB result types that a pandas fetch (``fetchdf``) turns into float
+# columns. An integer column holding a NULL turns float whatever
+# its type, which no CAST fixes, so the guard skips columns with a NULL/NaN.
+PANDAS_FLOAT_TYPES = {"hugeint", "uhugeint", "decimal", "double", "float"}
+
+
+def is_na(val) -> bool:
+    return val is None or (isinstance(val, float) and math.isnan(val))
+
+
 def frame_to_canon(cols, rows):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     out = [tuple(canon(r[i]) for i in order) for r in rows]
@@ -61,8 +71,8 @@ def main() -> int:
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
-    # Optional driver-format artifact (CORRECTNESS_r*.json shape) — the
-    # local all-query mirror the per-round ALLCHECK records come from.
+    # Optional per-query JSON record. The round-era ALLCHECK_* and
+    # CORRECTNESS_r* files in this shape are at 1814ba1 in git history.
     out_path = os.environ.get("SPARK_GRAFT_ALLCHECK_OUT")
     results: dict[str, dict] = {}
 
@@ -91,32 +101,34 @@ def main() -> int:
             record(name, s_rows=len(srows), err="no_oracle")
             continue
         try:
-            cur = con.execute(oracles[name])
-            ocols = [d[0] for d in cur.description]
-            orows = cur.fetchall()
-            # Driver-parity guard: the driver fetches oracles via pandas, which
-            # turns DuckDB HUGEINT (e.g. SUM(int)) into float64 and breaks the
-            # value hash against Spark's integer output even when values match.
-            opd = con.execute(oracles[name]).fetchdf()
-            int_spark = {
-                f.name
-                for f in sdf.schema.fields
-                if f.dataType.typeName() in ("byte", "short", "integer", "long")
-            }
-            drift = [
-                c
-                for c, d in opd.dtypes.astype(str).items()
-                if d.startswith("float") and c in int_spark and not opd[c].isna().any()
-            ]
-            if drift:
-                print(f"FAIL {name}: oracle pandas dtype drift (int on Spark, "
-                      f"float in driver fetch) on {drift} — add CAST(... AS BIGINT)")
-                failures.append(name)
-                continue
+            rel = con.sql(oracles[name])
+            ocols = list(rel.columns)
+            otypes = [t.id for t in rel.types]
+            orows = rel.fetchall()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: oracle error: {e}")
             failures.append(name)
             record(name, s_rows=len(srows), err=f"oracle: {e}")
+            continue
+        # Pandas-parity guard: an oracle fetched via pandas turns DuckDB
+        # HUGEINT (e.g. SUM(int)) into float64, which breaks the value hash
+        # against Spark's integer output even when the values match.
+        int_spark = {
+            f.name
+            for f in sdf.schema.fields
+            if f.dataType.typeName() in ("byte", "short", "integer", "long")
+        }
+        drift = [
+            c
+            for i, (c, t) in enumerate(zip(ocols, otypes))
+            if t in PANDAS_FLOAT_TYPES and c in int_spark
+            and not any(is_na(r[i]) for r in orows)
+        ]
+        if drift:
+            print(f"FAIL {name}: oracle pandas dtype drift (int on Spark, "
+                  f"float in pandas fetch) on {drift} — add CAST(... AS BIGINT)")
+            failures.append(name)
+            record(name, s_rows=len(srows), err=f"oracle dtype drift: {drift}")
             continue
 
         sc, sv = frame_to_canon(scols, srows)
