@@ -12,7 +12,7 @@ not a PSNR bound. Scope (GIF87a/89a, the honest common subset):
   draw-over (disposal 0/1), restore-to-background (disposal 2, filled
   from the GLOBAL color table per spec), restore-to-previous
   (disposal 3), transparency leaving the canvas unchanged;
-* **encode** (the fixture generator, same role as ``encode_jpeg_arith``):
+* **encode** (the fixture generator for the decode tests):
   palette + index rasters → single- or multi-frame GIF89a with a real
   LZW compressor (code-width growth, table-full clear), optional
   interlacing, optional per-frame offsets for partial updates;

@@ -12,10 +12,10 @@ Decode paths, in preference order:
   numpy) — real decode of real PNG bytes with zero external deps; this
   is the live path in this environment.
 * **Built-in JPEG codec** (``operators/jpeg_codec.py``, stdlib
-  struct + numpy) — real decode of baseline / extended / progressive /
-  arithmetic / lossless / hierarchical JPEG — every non-reserved T.81
-  frame type (1/3 components, sampling factors ≤ 4, restart
-  intervals).
+  struct + numpy) — real decode of Huffman-coded JPEG: baseline /
+  extended / progressive, 8- or 12-bit (1/3 components, sampling
+  factors ≤ 4, restart intervals), lossless (SOF3, 2-16 bit) and
+  hierarchical; arithmetic-coded JPEG raises NotImplementedError.
 * **Built-in GIF codec** (``operators/gif_codec.py``, stdlib struct +
   numpy) — real LZW decode of GIF87a/89a stills and animations
   (interlace, local palettes, transparency, frame composition with
@@ -23,9 +23,8 @@ Decode paths, in preference order:
 * **Built-in Y4M demuxer** (``operators/y4m_codec.py``) — real
   frame extraction from uncompressed YUV4MPEG2 video payloads.
 * **Built-in WAV codec** (``operators/wav_codec.py``) — real PCM
-  sample decode (8/16/24/32-bit int + float32/64), IMA-ADPCM
-  (format tag 0x0011) and G.711 µ-law/A-law (0x0007/0x0006)
-  encode/decode for audio payloads.
+  sample decode (8/16/24/32-bit int + float32/64) for audio payloads;
+  compressed WAV encodings (ADPCM, G.711) raise NotImplementedError.
 * ``fake=True`` — deterministic byte-level features over the raw
   payload (no decode), useful for plumbing tests and non-image bytes.
 * Everything else (compressed containers/codecs, exotic formats)
@@ -42,7 +41,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    BooleanType,
     DoubleType,
     LongType,
     StringType,
@@ -106,9 +104,11 @@ def assets_from_documents(docs: DataFrame, id_col: str = "doc_id", text_col: str
 
 def _decode_raster(payload: bytes, fmt: str):
     """payload → uint8 numpy raster. Pillow when importable (any format),
-    else the built-in codecs for ``fmt='png'`` (lossless) and
-    ``fmt in ('jpeg', 'jpg')`` (baseline sequential);
-    NotImplementedError for formats that genuinely need an absent codec.
+    else the built-in codecs for ``fmt='png'`` (lossless),
+    ``fmt in ('jpeg', 'jpg')`` (Huffman-coded: sequential, progressive,
+    lossless and hierarchical) and
+    ``fmt='gif'`` (first frame); NotImplementedError for formats, or JPEG
+    coding modes, that need an absent codec.
 
     Import and decode are deliberately separate: only ImportError may
     route to the fallback chain silently. A Pillow DECODE failure (bad or
@@ -517,420 +517,6 @@ def synth_png_assets(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return spread_small(docs.select(id_col)).mapInPandas(synth, ASSET_SCHEMA)
 
 
-JPEG_ROUNDTRIP_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("width", LongType(), False),
-        StructField("height", LongType(), False),
-        StructField("n_pixels", LongType(), False),
-        StructField("dims_match", BooleanType(), False),
-        StructField("mae_le_4", BooleanType(), False),
-        StructField("psnr_ge_30", BooleanType(), False),
-    ]
-)
-
-
-def jpeg_roundtrip_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    quality: int = 90,
-) -> DataFrame:
-    """Lossy-codec round-trip gate — the JPEG twin of the lossless
-    ``image_decode_stats``/``audio_demux_stats`` pipelines, adapted to a
-    codec whose pixels are NOT bit-recoverable: per key ``d`` a smooth
-    deterministic gradient raster ``w = 24 + d % 9`` × ``h = 24 + d % 7``
-    with pixel ``(r, c) = (d % 97) + 3r + 2c`` (≤ 248, no clipping —
-    SQL-regenerable) is encoded through the REAL baseline JPEG writer and
-    decoded back; the output carries the exact geometry plus
-    by-construction quality flags (dims match; mean abs error ≤ 4; PSNR
-    ≥ 30 dB — a linear ramp concentrates DCT energy in the lowest
-    coefficients, far inside quality-90 quantization). Every step is a
-    deterministic pure function of ``d``, so the flags are stable across
-    partitionings and runs; the oracle regenerates the geometry and
-    asserts the flags (the guarantee-gate pattern). One narrow
-    ``mapInPandas`` chain, zero shuffles.
-    """
-
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .jpeg_codec import decode_jpeg, encode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 24 + d % 9, 24 + d % 7
-                r = np.arange(h, dtype=np.int64)[:, None]
-                c = np.arange(w, dtype=np.int64)[None, :]
-                raster = ((d % 97) + 3 * r + 2 * c).astype(np.uint8)
-                out = decode_jpeg(encode_jpeg(raster, quality=quality))
-                dims = out.shape == (h, w)
-                err = np.abs(
-                    out.astype(np.float64) - raster.astype(np.float64)
-                )
-                mse = float((err**2).mean())
-                psnr = float("inf") if mse == 0 else 10 * np.log10(255.0**2 / mse)
-                rows.append(
-                    (d, w, h, w * h, dims, float(err.mean()) <= 4.0, psnr >= 30.0)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "n_pixels",
-                    "dims_match", "mae_le_4", "psnr_ge_30",
-                ],
-            )
-
-    from .text import spread_small
-
-    # per-coefficient Huffman coding is the heaviest Python in the repo:
-    # spread an under-partitioned input or one task pays it all
-    return spread_small(docs.select(id_col)).mapInPandas(
-        roundtrip, JPEG_ROUNDTRIP_SCHEMA
-    )
-
-
-PROGRESSIVE_JPEG_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("width", LongType(), False),
-        StructField("height", LongType(), False),
-        StructField("dims_match", BooleanType(), False),
-        StructField("matches_sequential", BooleanType(), False),
-        StructField("psnr_ge_30", BooleanType(), False),
-    ]
-)
-
-
-def progressive_jpeg_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    quality: int = 90,
-) -> DataFrame:
-    """Progressive-JPEG cross-path gate — the SOF2 twin of
-    :func:`jpeg_roundtrip_stats`, closing the last image-codec seam: per
-    key ``d`` the same deterministic gradient raster (``w = 24 + d % 9``
-    × ``h = 24 + d % 7``, pixel ``(d % 97) + 3r + 2c``) is encoded
-    through the REAL progressive writer (``encode_jpeg_progressive`` —
-    libjpeg-style 10-scan script: spectral selection + successive
-    approximation) and decoded back by the multi-scan coefficient-
-    accumulating decoder.
-
-    The headline flag is STRUCTURAL, not statistical: both coding paths
-    quantize to identical coefficients and progressive scans transmit
-    every bit of them, so the progressive decode must equal the
-    baseline-sequential decode of the same raster BIT-FOR-BIT
-    (``matches_sequential``) — a decoder that drops an EOB run,
-    mis-walks a refinement pass, or shifts a bit-plane cannot pass.
-    PSNR rides along as the usual lossy-quality bound. Every step is a
-    pure function of ``d``; the oracle regenerates geometry and asserts
-    the flags (guarantee-gate pattern). One narrow ``mapInPandas``
-    chain, zero shuffles.
-    """
-
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .jpeg_codec import (
-            decode_jpeg,
-            encode_jpeg,
-            encode_jpeg_progressive,
-        )
-
-        for pdf in batches:
-            rows = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 24 + d % 9, 24 + d % 7
-                r = np.arange(h, dtype=np.int64)[:, None]
-                c = np.arange(w, dtype=np.int64)[None, :]
-                raster = ((d % 97) + 3 * r + 2 * c).astype(np.uint8)
-                prog = decode_jpeg(encode_jpeg_progressive(raster, quality))
-                base = decode_jpeg(encode_jpeg(raster, quality=quality))
-                dims = prog.shape == (h, w)
-                err = prog.astype(np.float64) - raster.astype(np.float64)
-                mse = float((err**2).mean())
-                psnr = (
-                    float("inf") if mse == 0 else 10 * np.log10(255.0**2 / mse)
-                )
-                rows.append(
-                    (d, w, h, dims, bool(np.array_equal(prog, base)),
-                     psnr >= 30.0)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height",
-                    "dims_match", "matches_sequential", "psnr_ge_30",
-                ],
-            )
-
-    from .text import spread_small
-
-    # two full encodes + decodes of per-coefficient Python Huffman work
-    # per row: spread an under-partitioned input or one task pays it all
-    return spread_small(docs.select(id_col)).mapInPandas(
-        roundtrip, PROGRESSIVE_JPEG_SCHEMA
-    )
-
-
-ARITH_JPEG_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("width", LongType(), False),
-        StructField("height", LongType(), False),
-        StructField("dims_match", BooleanType(), False),
-        StructField("matches_huffman", BooleanType(), False),
-        StructField("smaller_than_huffman", BooleanType(), False),
-        StructField("psnr_ge_30", BooleanType(), False),
-    ]
-)
-
-
-def arith_jpeg_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    quality: int = 90,
-) -> DataFrame:
-    """Arithmetic-JPEG cross-path gate — the SOF9 twin of
-    :func:`progressive_jpeg_stats`, closing the entropy-coding seam: per
-    key ``d`` the same deterministic gradient raster is encoded through
-    the REAL QM-coder writer (``encode_jpeg_arith`` — T.81 Annex D
-    state machine + Annex F.1.4 DC/AC statistical model) and decoded
-    back by the adaptive arithmetic decoder.
-
-    The headline flag is STRUCTURAL: both entropy back ends transmit
-    the IDENTICAL quantized coefficients, so the arithmetic decode must
-    equal the Huffman decode of the same raster BIT-FOR-BIT
-    (``matches_huffman``) — a decoder that mis-tracks a context bin, a
-    carry ripple, a stuffed byte, or a conditioning category cannot
-    pass. ``smaller_than_huffman`` pins the adaptive coder actually
-    adapting (static Annex-K tables lose to it on these gradients).
-    Every step is a pure function of ``d``; the oracle regenerates
-    geometry and asserts the flags (guarantee-gate pattern). One narrow
-    ``mapInPandas`` chain, zero shuffles.
-    """
-
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .jpeg_codec import decode_jpeg, encode_jpeg, encode_jpeg_arith
-
-        for pdf in batches:
-            rows = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 24 + d % 9, 24 + d % 7
-                r = np.arange(h, dtype=np.int64)[:, None]
-                c = np.arange(w, dtype=np.int64)[None, :]
-                raster = ((d % 97) + 3 * r + 2 * c).astype(np.uint8)
-                astream = encode_jpeg_arith(raster, quality=quality)
-                hstream = encode_jpeg(raster, quality=quality)
-                arith = decode_jpeg(astream)
-                huff = decode_jpeg(hstream)
-                dims = arith.shape == (h, w)
-                err = arith.astype(np.float64) - raster.astype(np.float64)
-                mse = float((err**2).mean())
-                psnr = (
-                    float("inf") if mse == 0 else 10 * np.log10(255.0**2 / mse)
-                )
-                rows.append(
-                    (d, w, h, dims, bool(np.array_equal(arith, huff)),
-                     len(astream) < len(hstream), psnr >= 30.0)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "dims_match",
-                    "matches_huffman", "smaller_than_huffman", "psnr_ge_30",
-                ],
-            )
-
-    from .text import spread_small
-
-    return spread_small(docs.select(id_col)).mapInPandas(
-        roundtrip, ARITH_JPEG_SCHEMA
-    )
-
-
-GIF_ROUNDTRIP_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("width", LongType(), False),
-        StructField("height", LongType(), False),
-        StructField("n_colors", LongType(), False),
-        StructField("interlaced", BooleanType(), False),
-        StructField("dims_match", BooleanType(), False),
-        StructField("matches_source", BooleanType(), False),
-    ]
-)
-
-
-def gif_roundtrip_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """GIF round-trip gate — the LOSSLESS image twin of
-    ``image_decode_stats`` (PNG) on the legacy web format: per key ``d``
-    a deterministic palette (``2 + d % 31`` colors) and index raster
-    (``w = 8 + d % 6`` × ``h = 6 + d % 5``, pixel ``(d + 3r + 2c) %
-    n_colors``) encode through the REAL LZW writer — interlaced on odd
-    keys, so both row orders stay exercised — and decode back.
-
-    GIF is lossless for palettized content, so the headline flag is
-    EXACT: ``matches_source`` pins ``decode(encode(x)) ==
-    palette[x]`` pixel-for-pixel — an LZW width-growth slip, a wrong
-    interlace pass, or a palette offset bug cannot pass. Every step is
-    a pure function of ``d``; the oracle regenerates geometry and
-    asserts the flags (guarantee-gate pattern). One narrow
-    ``mapInPandas`` chain, zero shuffles.
-    """
-
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .gif_codec import decode_gif, encode_gif
-
-        for pdf in batches:
-            rows = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 8 + d % 6, 6 + d % 5
-                nc = 2 + d % 31
-                i = np.arange(nc, dtype=np.int64)
-                pal = np.stack(
-                    [
-                        (d * 7 + i * 13) % 256,
-                        (d * 11 + i * 17) % 256,
-                        (d * 3 + i * 29) % 256,
-                    ],
-                    axis=1,
-                ).astype(np.uint8)
-                r = np.arange(h, dtype=np.int64)[:, None]
-                c = np.arange(w, dtype=np.int64)[None, :]
-                idx = ((d + 3 * r + 2 * c) % nc).astype(np.uint8)
-                interlaced = bool(d % 2)
-                frames = decode_gif(
-                    encode_gif([idx], pal, interlace=interlaced)
-                )
-                ok_dims = (
-                    len(frames) == 1 and frames[0].shape == (h, w, 3)
-                )
-                rows.append(
-                    (
-                        d, w, h, nc, interlaced, ok_dims,
-                        ok_dims and bool(np.array_equal(frames[0], pal[idx])),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "n_colors",
-                    "interlaced", "dims_match", "matches_source",
-                ],
-            )
-
-    from .text import spread_small
-
-    return spread_small(docs.select(id_col)).mapInPandas(
-        roundtrip, GIF_ROUNDTRIP_SCHEMA
-    )
-
-
-ADPCM_ROUNDTRIP_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("n_frames", LongType(), False),
-        StructField("n_channels", LongType(), False),
-        StructField("frames_match", BooleanType(), False),
-        StructField("snr_ge_20", BooleanType(), False),
-        StructField("ratio_le_045", BooleanType(), False),
-    ]
-)
-
-
-def adpcm_roundtrip_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    rate: int = 8000,
-) -> DataFrame:
-    """Lossy-audio round-trip gate — the IMA-ADPCM twin of
-    :func:`jpeg_roundtrip_stats`, closing the compressed-audio seam the
-    same way JPEG closed the image one: per key ``d`` a band-limited
-    deterministic tone (``n = 400 + d % 211`` frames,
-    ``ch = 1 + d % 2`` channels, frequency ``100 + d % 50`` Hz at 8 kHz
-    — smooth enough that 4-bit ADPCM tracks it) is encoded through the
-    REAL block-structured IMA encoder (``wav_codec.encode_wav_adpcm``)
-    and decoded back; the output carries the exact geometry plus
-    by-construction quality flags (frame count survives the fact-chunk
-    trim; SNR ≥ 20 dB; compressed size ≤ 0.45× the PCM encoding — the
-    codec's ~4:1 with headers). Every step is a deterministic pure
-    function of ``d``, so the flags are stable across partitionings and
-    the oracle regenerates geometry and asserts the flags (the
-    guarantee-gate pattern). One narrow ``mapInPandas`` chain, zero
-    shuffles.
-
-    The size bound is 0.45×PCM, not the asymptotic 0.25: these are
-    sub-second clips (400–610 frames), so per-block headers and the
-    zero-padded final block are a real fraction of the stream —
-    ``block_words=16`` (129-frame blocks) keeps the worst case
-    (n=400 mono: 0.393) under the bound at every synth geometry.
-
-    SNR margin (ADVICE r7): channel 1's ``np.roll`` delay wraps the
-    tone, so one sample jumps by up to ~12000 int16 steps and ADPCM
-    must slew through it; measured exhaustively over the full geometry
-    domain the worst-case SNR is 21.78 dB against the 20 dB flag — a
-    1.78 dB margin. Any change to ``block_words``, the cold-start
-    state, or the synth geometry must re-verify that margin before
-    trusting the oracle's unconditional TRUE.
-    """
-
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .wav_codec import decode_wav, encode_wav, encode_wav_adpcm
-
-        for pdf in batches:
-            rows = []
-            for d in pdf[id_col]:
-                d = int(d)
-                n, ch = 400 + d % 211, 1 + d % 2
-                freq = 100 + d % 50
-                i = np.arange(n, dtype=np.float64)
-                tone = np.rint(
-                    12000.0 * np.sin(2.0 * np.pi * freq * i / rate)
-                ).astype(np.int16)
-                sig = np.stack(
-                    [np.roll(tone, 13 * c) for c in range(ch)], axis=1
-                )
-                blob = encode_wav_adpcm(sig, rate, block_words=16)
-                back, _rate = decode_wav(blob)
-                frames = back.shape == (n, ch)
-                ref = sig.astype(np.float64) / 32768.0
-                err = back.astype(np.float64) - ref
-                snr = 10.0 * np.log10(
-                    (ref**2).mean() / max((err**2).mean(), 1e-12)
-                )
-                ratio = len(blob) / len(encode_wav(sig, rate))
-                rows.append((d, n, ch, frames, snr >= 20.0, ratio <= 0.45))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "n_frames", "n_channels",
-                    "frames_match", "snr_ge_20", "ratio_le_045",
-                ],
-            )
-
-    from .text import spread_small
-
-    # per-sample ADPCM state walks are CPU-bound Python: spread an
-    # under-partitioned input or one task pays it all
-    return spread_small(docs.select(id_col)).mapInPandas(
-        roundtrip, ADPCM_ROUNDTRIP_SCHEMA
-    )
-
-
 AUDIO_FEATURE_SCHEMA = StructType(
     [
         StructField("asset_id", LongType(), False),
@@ -1035,506 +621,6 @@ def audio_features(assets: DataFrame, fake: bool = True) -> DataFrame:
             )
 
     return assets.mapInPandas(extract, AUDIO_FEATURE_SCHEMA)
-
-
-LOSSLESS_JPEG_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("width", LongType(), False),
-        StructField("height", LongType(), False),
-        StructField("prec_bits", LongType(), False),
-        StructField("predictor", LongType(), False),
-        StructField("n_channels", LongType(), False),
-        StructField("sample_sum", LongType(), False),
-        StructField("matches_source", BooleanType(), False),
-    ]
-)
-
-ARITH_LOSSLESS_JPEG_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("width", LongType(), False),
-        StructField("height", LongType(), False),
-        StructField("prec_bits", LongType(), False),
-        StructField("predictor", LongType(), False),
-        StructField("n_channels", LongType(), False),
-        StructField("restart_mcus", LongType(), False),
-        StructField("sample_sum", LongType(), False),
-        StructField("matches_source", BooleanType(), False),
-        StructField("agrees_with_huffman_path", BooleanType(), False),
-    ]
-)
-
-
-def lossless_jpeg_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Lossless-JPEG round-trip gate (SOF3, T.81 Annex H — r12): the
-    DICOM/raw-camera twin of :func:`gif_roundtrip_stats`, with the same
-    EXACT contract — no DCT, no quantization, so ``decode(encode(x))``
-    must equal ``x`` bit-for-bit.
-
-    Per key ``d``: a ``w = 8 + d % 7`` × ``h = 6 + d % 5`` raster with
-    ``ch = 1 + 2·(d % 2)`` channels at ``prec = 16 if d % 4 == 0 else
-    8`` bits, pixel ``(r, c, k) = (d·31 + r·17 + c·7 + k·13) mod
-    2^prec``, encoded through the REAL predictive coder with predictor
-    ``1 + d % 7`` (all seven T.81 H.1.2 predictors stay exercised),
-    one-scan-per-component on ``d % 5 == 0`` — then decoded back.
-    Output carries ``matches_source`` (exact equality) AND
-    ``sample_sum``, the decoded pixels' integer sum: the oracle
-    recomputes that sum from the synthesis formula in SQL, so a decoder
-    that misreads a single sample value-mismatches even if the flag
-    logic were wrong. Every step is a pure function of ``d``; sweep
-    over the full synthesis-key domain (lcm of all periods = 140,
-    verified exhaustively pre-ship) backs the blanket-TRUE flag. One
-    narrow ``mapInPandas`` chain, zero shuffles.
-    """
-
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .jpeg_codec import decode_jpeg, encode_jpeg_lossless
-
-        for pdf in batches:
-            rows = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 8 + d % 7, 6 + d % 5
-                prec = 16 if d % 4 == 0 else 8
-                pred = 1 + d % 7
-                nch = 1 + 2 * (d % 2)
-                interleave = d % 5 != 0
-                r = np.arange(h, dtype=np.int64)[:, None, None]
-                c = np.arange(w, dtype=np.int64)[None, :, None]
-                k = np.arange(nch, dtype=np.int64)[None, None, :]
-                px = (d * 31 + r * 17 + c * 7 + k * 13) % (1 << prec)
-                dtype = np.uint8 if prec == 8 else np.uint16
-                img = px.astype(dtype)
-                if nch == 1:
-                    img = img[..., 0]
-                got = decode_jpeg(
-                    encode_jpeg_lossless(
-                        img, predictor=pred, precision=prec,
-                        interleave=interleave,
-                    )
-                )
-                rows.append(
-                    (
-                        d, w, h, prec, pred, nch,
-                        int(got.astype(np.int64).sum()),
-                        bool(
-                            got.dtype == img.dtype
-                            and np.array_equal(got, img)
-                        ),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "prec_bits",
-                    "predictor", "n_channels", "sample_sum",
-                    "matches_source",
-                ],
-            )
-
-    from .text import spread_small
-
-    return spread_small(docs.select(id_col)).mapInPandas(
-        roundtrip, LOSSLESS_JPEG_SCHEMA
-    )
-
-
-def arith_lossless_jpeg_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Arithmetic-lossless JPEG round-trip gate (SOF11, T.81 Annex H +
-    the Annex D QM-coder — r13): completes the non-hierarchical T.81
-    mode matrix. Same EXACT contract as :func:`lossless_jpeg_stats`
-    (no DCT, no quantization → ``decode(encode(x)) == x``), with the
-    entropy layer swapped for the H.1.2 conditioned difference model.
-
-    Per key ``d``: the SAME raster synthesis as the Huffman gate
-    (``w = 8 + d % 7`` × ``h = 6 + d % 5``, ``ch = 1 + 2·(d % 2)``,
-    ``prec = 16 if d % 4 == 0 else 8``, predictor ``1 + d % 7``,
-    one-scan-per-component on ``d % 5 == 0``) plus the SOF11-specific
-    axes: a restart interval ``1 + d % 11`` on ``d % 3 == 0`` (QM
-    coder, statistics, class grids and prediction anchor all reset per
-    segment) and non-default DAC conditioning ``(L, U) = (1, 3)`` on
-    ``d % 6 == 0``. Output carries the value-exact ``sample_sum``,
-    ``matches_source``, and ``agrees_with_huffman_path`` — the SOF3
-    decode of the SAME raster must agree bit-for-bit, pinning the two
-    lossless entropy layers against each other on every key. Sweep
-    over the full synthesis-key domain (lcm of all periods = 4620,
-    verified exhaustively pre-ship) backs the blanket-TRUE flags. One
-    narrow ``mapInPandas`` chain, zero shuffles.
-    """
-
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .jpeg_codec import (
-            decode_jpeg,
-            encode_jpeg_lossless,
-            encode_jpeg_lossless_arith,
-        )
-
-        for pdf in batches:
-            rows = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 8 + d % 7, 6 + d % 5
-                prec = 16 if d % 4 == 0 else 8
-                pred = 1 + d % 7
-                nch = 1 + 2 * (d % 2)
-                interleave = d % 5 != 0
-                restart = (1 + d % 11) if d % 3 == 0 else 0
-                cond = (1, 3) if d % 6 == 0 else None
-                r = np.arange(h, dtype=np.int64)[:, None, None]
-                c = np.arange(w, dtype=np.int64)[None, :, None]
-                k = np.arange(nch, dtype=np.int64)[None, None, :]
-                px = (d * 31 + r * 17 + c * 7 + k * 13) % (1 << prec)
-                dtype = np.uint8 if prec == 8 else np.uint16
-                img = px.astype(dtype)
-                if nch == 1:
-                    img = img[..., 0]
-                got = decode_jpeg(
-                    encode_jpeg_lossless_arith(
-                        img, predictor=pred, precision=prec,
-                        interleave=interleave, restart_interval=restart,
-                        dc_cond=cond,
-                    )
-                )
-                huff = decode_jpeg(
-                    encode_jpeg_lossless(
-                        img, predictor=pred, precision=prec,
-                        interleave=interleave,
-                    )
-                )
-                rows.append(
-                    (
-                        d, w, h, prec, pred, nch, restart,
-                        int(got.astype(np.int64).sum()),
-                        bool(
-                            got.dtype == img.dtype
-                            and np.array_equal(got, img)
-                        ),
-                        bool(
-                            got.dtype == huff.dtype
-                            and np.array_equal(got, huff)
-                        ),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "prec_bits",
-                    "predictor", "n_channels", "restart_mcus",
-                    "sample_sum", "matches_source",
-                    "agrees_with_huffman_path",
-                ],
-            )
-
-    from .text import spread_small
-
-    return spread_small(docs.select(id_col)).mapInPandas(
-        roundtrip, ARITH_LOSSLESS_JPEG_SCHEMA
-    )
-
-
-HIER_JPEG_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("width", LongType(), False),
-        StructField("height", LongType(), False),
-        StructField("prec_bits", LongType(), False),
-        StructField("n_channels", LongType(), False),
-        StructField("levels", LongType(), False),
-        StructField("base_mode", StringType(), False),
-        StructField("dct_rung", BooleanType(), False),
-        StructField("sample_sum", LongType(), False),
-        StructField("matches_source", BooleanType(), False),
-    ]
-)
-
-
-def hier_jpeg_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Hierarchical JPEG round-trip gate (T.81 Annex J — r13): DHP +
-    EXP reference expansion + a non-differential base frame +
-    differential LOSSLESS refinement frames (SOF7/SOF15). The final
-    refinement corrects every sample, so ``decode(encode(x)) == x``
-    EXACTLY even over a lossy baseline base — which makes this gate
-    value-exact like :func:`lossless_jpeg_stats` (the oracle recomputes
-    the decoded pixel sum from the synthesis formula in SQL).
-
-    Per key ``d``: a ``w = 16 + d % 9`` × ``h = 16 + d % 7`` raster,
-    ``ch = 1 + 2·(d % 2)`` channels, ``prec = 16 if d % 8 == 1 else
-    8``, pyramid ``levels = 1 + d % 3`` (bumped to
-    2 when a baseline base would otherwise ship with no refinement —
-    a lossy base with zero residual frames is honestly lossy); base
-    mode cycles baseline (quality ``60 + d % 35``, the lossy-base
-    profile) / lossless / SOF11 on ``d % 4``, refinements switch to SOF15 QM coding on
-    ``d % 3 == 0``, base predictor ``1 + d % 7``; on ``d % 6 == 2``
-    the intermediate refinement level is a LOSSY differential-DCT rung
-    covering the full 2x2 differential mode matrix by ``d % 24``:
-    SOF5 (2), SOF13 (8, arith override), SOF6 (14, the spectral-
-    selection progressive script), SOF14 (20) — each corrected exactly
-    by the finest lossless rung. Sweep over the full
-    synthesis-key domain (lcm of all periods = 2520, verified
-    exhaustively pre-ship) backs the blanket-TRUE flag. One narrow
-    ``mapInPandas`` chain, zero shuffles.
-    """
-
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .jpeg_codec import decode_jpeg, encode_jpeg_hierarchical
-
-        for pdf in batches:
-            rows = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 16 + d % 9, 16 + d % 7
-                nch = 1 + 2 * (d % 2)
-                prec = 16 if d % 8 == 1 else 8
-                levels = 1 + d % 3
-                base = ("baseline", "lossless", "lossless_arith",
-                        "lossless")[d % 4]
-                if base == "baseline" and levels == 1:
-                    # a lossy base with no refinement frame cannot be
-                    # exact — the gate's contract needs >= 1 residual
-                    levels = 2
-                # DCT rungs on d == 2 (mod 6) -- even (gray, 8-bit)
-                # with levels==3, so a real intermediate level exists.
-                # The d%24 residue picks the mode-matrix cell: 2=SOF5,
-                # 8=SOF13 (arith override), 14=SOF6, 20=SOF14
-                dct_refine = d % 6 == 2
-                dct_mode = "prog" if d % 24 in (14, 20) else "seq"
-                arith = d % 3 == 0 or d % 24 in (8, 20)
-                pred = 1 + d % 7
-                r = np.arange(h, dtype=np.int64)[:, None, None]
-                c = np.arange(w, dtype=np.int64)[None, :, None]
-                k = np.arange(nch, dtype=np.int64)[None, None, :]
-                px = (d * 31 + r * 17 + c * 7 + k * 13) % (1 << prec)
-                dtype = np.uint8 if prec == 8 else np.uint16
-                img = px.astype(dtype)
-                if nch == 1:
-                    img = img[..., 0]
-                got = decode_jpeg(
-                    encode_jpeg_hierarchical(
-                        img, levels=levels, base=base,
-                        quality=60 + d % 35, predictor=pred,
-                        precision=prec, arith=arith,
-                        dct_refine=dct_refine, dct_mode=dct_mode,
-                    )
-                )
-                rows.append(
-                    (
-                        d, w, h, prec, nch, levels, base, dct_refine,
-                        int(got.astype(np.int64).sum()),
-                        bool(
-                            got.dtype == img.dtype
-                            and np.array_equal(got, img)
-                        ),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "prec_bits",
-                    "n_channels", "levels", "base_mode", "dct_rung",
-                    "sample_sum", "matches_source",
-                ],
-            )
-
-    from .text import spread_small
-
-    return spread_small(docs.select(id_col)).mapInPandas(
-        roundtrip, HIER_JPEG_SCHEMA
-    )
-
-
-G711_ROUNDTRIP_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("n_frames", LongType(), False),
-        StructField("n_channels", LongType(), False),
-        StructField("law", StringType(), False),
-        StructField("frames_match", BooleanType(), False),
-        StructField("snr_ge_30", BooleanType(), False),
-        StructField("ratio_half_pcm", BooleanType(), False),
-        StructField("err_le_segment", BooleanType(), False),
-    ]
-)
-
-
-def g711_roundtrip_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    rate: int = 8000,
-) -> DataFrame:
-    """G.711 telephony round-trip gate — the µ-law/A-law sibling of
-    :func:`adpcm_roundtrip_stats`: per key ``d`` a deterministic tone
-    (``n = 300 + d % 173`` frames, ``ch = 1 + d % 2`` channels,
-    ``120 + d % 40`` Hz, amplitude 11000) is companded through the REAL
-    vectorized G.711 encoder (µ-law on even keys, A-law on odd) and
-    expanded back. Flags: exact frame geometry; SNR ≥ 30 dB (log
-    companding holds ~38 dB SNR on full-range content — wide margin);
-    whole-container size ≤ 0.56× the PCM16 encoding (1 code byte per
-    sample; the exact worst case is (56+n+pad)/(44+2n) = 0.5543 at the
-    smallest synth geometry n=300 mono — headers, not codes); and the
-    per-sample error never exceeds the amplitude's companding-segment
-    step (512 int16 units: amplitude 11000 falls in segment 6 of both
-    laws, step 128<<2 µ-law / 64<<3 A-law; sweep-measured worst 257 =
-    half-step + rounding).
-    The codec itself is differential-verified against stdlib audioop
-    over the FULL domain (tests/test_codec_differential.py); this gate
-    makes the path catalog-graded. One narrow mapInPandas chain, zero
-    shuffles.
-    """
-
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .wav_codec import decode_wav, encode_wav, encode_wav_g711
-
-        for pdf in batches:
-            rows = []
-            for d in pdf[id_col]:
-                d = int(d)
-                n, ch = 300 + d % 173, 1 + d % 2
-                freq = 120 + d % 40
-                law = "ulaw" if d % 2 == 0 else "alaw"
-                i = np.arange(n, dtype=np.float64)
-                tone = np.rint(
-                    11000.0 * np.sin(2.0 * np.pi * freq * i / rate)
-                ).astype(np.int16)
-                sig = np.stack(
-                    [np.roll(tone, 11 * c) for c in range(ch)], axis=1
-                )
-                blob = encode_wav_g711(sig, rate, law)
-                back, _rate = decode_wav(blob)
-                frames = back.shape == (n, ch)
-                ref = sig.astype(np.float64) / 32768.0
-                err = back.astype(np.float64) - ref
-                snr = 10.0 * np.log10(
-                    (ref**2).mean() / max((err**2).mean(), 1e-12)
-                )
-                max_err = float(np.abs(err).max()) * 32768.0
-                ratio = len(blob) / len(encode_wav(sig, rate))
-                rows.append(
-                    (
-                        d, n, ch, law, frames,
-                        bool(snr >= 30.0),
-                        bool(ratio <= 0.56),
-                        bool(max_err <= 512.0),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "n_frames", "n_channels", "law",
-                    "frames_match", "snr_ge_30", "ratio_half_pcm",
-                    "err_le_segment",
-                ],
-            )
-
-    from .text import spread_small
-
-    return spread_small(docs.select(id_col)).mapInPandas(
-        roundtrip, G711_ROUNDTRIP_SCHEMA
-    )
-
-
-PROG_ARITH_JPEG_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("width", LongType(), False),
-        StructField("height", LongType(), False),
-        StructField("dims_match", BooleanType(), False),
-        StructField("matches_baseline", BooleanType(), False),
-        StructField("smaller_than_prog_huffman", BooleanType(), False),
-        StructField("psnr_ge_30", BooleanType(), False),
-    ]
-)
-
-
-def prog_arith_jpeg_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    quality: int = 85,
-) -> DataFrame:
-    """Progressive-arithmetic cross-path gate (SOF10 — r12), completing
-    the JPEG DCT-mode matrix: per key ``d`` the SAME gradient synthesis
-    as :func:`arith_jpeg_stats` is encoded through the T.81 Annex G
-    scan script with the QM-coder back end
-    (``encode_jpeg_arith_progressive``) and decoded by the real G.3
-    model decoder. ``matches_baseline`` pins bit-exact agreement with
-    the SOF0 Huffman decode — all four DCT encoders share one
-    coefficient front half, so a model/context slip anywhere in the
-    G.3 DC/AC first/refinement paths cannot pass.
-    ``smaller_than_prog_huffman`` pins the adaptive coder beating the
-    static Annex-K tables scan-for-scan. One narrow mapInPandas chain,
-    zero shuffles.
-    """
-
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .jpeg_codec import (
-            decode_jpeg,
-            encode_jpeg,
-            encode_jpeg_arith_progressive,
-            encode_jpeg_progressive,
-        )
-
-        for pdf in batches:
-            rows = []
-            for d in pdf[id_col]:
-                d = int(d)
-                w, h = 24 + d % 9, 24 + d % 7
-                r = np.arange(h, dtype=np.int64)[:, None]
-                c = np.arange(w, dtype=np.int64)[None, :]
-                raster = ((d % 97) + 3 * r + 2 * c).astype(np.uint8)
-                pstream = encode_jpeg_arith_progressive(
-                    raster, quality=quality
-                )
-                got = decode_jpeg(pstream)
-                base = decode_jpeg(encode_jpeg(raster, quality=quality))
-                dims = got.shape == (h, w)
-                err = got.astype(np.float64) - raster.astype(np.float64)
-                mse = float((err**2).mean())
-                psnr = (
-                    float("inf") if mse == 0 else 10 * np.log10(255.0**2 / mse)
-                )
-                rows.append(
-                    (
-                        d, w, h, dims,
-                        bool(np.array_equal(got, base)),
-                        len(pstream) < len(
-                            encode_jpeg_progressive(raster, quality=quality)
-                        ),
-                        psnr >= 30.0,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "dims_match",
-                    "matches_baseline", "smaller_than_prog_huffman",
-                    "psnr_ge_30",
-                ],
-            )
-
-    from .text import spread_small
-
-    return spread_small(docs.select(id_col)).mapInPandas(
-        roundtrip, PROG_ARITH_JPEG_SCHEMA
-    )
 
 
 PATCH_GRID_SCHEMA = StructType(

@@ -8,16 +8,10 @@ implement honestly: a ``RIFF`` container holding a ``WAVE`` form with a
 ``fmt `` chunk (format tag, channels, sample rate, bit depth) and a
 ``data`` chunk of interleaved PCM frames. Supported encodings: integer
 PCM at 8 (unsigned), 16, 24 and 32 bits, any channel count, plus
-IEEE-float 32 — which covers what encoders emit for uncompressed audio —
-plus **IMA/DVI ADPCM (format tag 0x0011)**, the classic 4-bit lossy
-telephony codec whose spec (IMA Digital Audio Focus Group, 1992; the
-same tables libsndfile/ffmpeg ship) is small enough to implement
-honestly: block headers carry (predictor, step index) per channel, data
-is 4-bit nibbles round-robined in 4-byte words per channel, and a
-``fact`` chunk pins the true frame count so the final partial block
-trims exactly. Perceptual codecs (mp3/a-law/µ-law/vorbis…) raise
-NotImplementedError at the exact seam where ffmpeg/torchaudio would
-plug in — they are not honestly reimplementable here.
+IEEE-float 32/64 — which covers what encoders emit for uncompressed
+audio. Compressed encodings (ADPCM, G.711 A-law/µ-law, mp3, vorbis…)
+raise NotImplementedError at the exact seam where ffmpeg/torchaudio
+would plug in.
 
 Chunk walking follows the RIFF rules that trip naive parsers: chunks
 may appear in any order after ``fmt `` precedes ``data``, unknown
@@ -40,94 +34,10 @@ import struct
 
 import numpy as np
 
-#: format tag → (numpy dtype, bytes/sample) for the directly-viewable widths
+#: WAVE fmt-chunk format tags the decoder reads
 _PCM_TAG = 0x0001
 _FLOAT_TAG = 0x0003
-_ADPCM_TAG = 0x0011  # IMA/DVI ADPCM
-_ALAW_TAG = 0x0006  # G.711 A-law
-_ULAW_TAG = 0x0007  # G.711 mu-law
 _EXTENSIBLE_TAG = 0xFFFE
-
-# ---------------------------------------------------------------------------
-# IMA ADPCM (format tag 0x0011) — the 1992 IMA reference tables
-# ---------------------------------------------------------------------------
-
-#: 89-entry step-size table (IMA spec §"First table lookup").
-_IMA_STEP = np.array([
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-], dtype=np.int64)
-
-#: step-index adjustment per nibble magnitude (sign bit ignored).
-_IMA_INDEX = np.array([-1, -1, -1, -1, 2, 4, 6, 8], dtype=np.int64)
-
-
-def _ima_decode_nibbles(nibbles, pred: int, idx: int):
-    """Decode a nibble sequence with running (predictor, step index) state.
-
-    Returns (int16 numpy array of decoded samples, pred, idx). The
-    reconstruction accumulator uses the spec's shift-add form
-    ``step>>3 (+ step>>2) (+ step>>1) (+ step)`` — bit-exact with
-    libsndfile/ffmpeg decoders, not the approximate ``(2n+1)*step/8``.
-    """
-    out = np.empty(len(nibbles), dtype=np.int16)
-    for i, n in enumerate(nibbles):
-        step = int(_IMA_STEP[idx])
-        diff = step >> 3
-        if n & 1:
-            diff += step >> 2
-        if n & 2:
-            diff += step >> 1
-        if n & 4:
-            diff += step
-        pred = pred - diff if n & 8 else pred + diff
-        pred = max(-32768, min(32767, pred))
-        out[i] = pred
-        idx = max(0, min(88, idx + int(_IMA_INDEX[n & 7])))
-    return out, pred, idx
-
-
-def _ima_encode_samples(samples, pred: int, idx: int):
-    """Encode int samples to nibbles, mirroring the decoder's state walk
-    (the encoder tracks the RECONSTRUCTED predictor, so error never
-    accumulates beyond one quantization step)."""
-    nibbles = np.empty(len(samples), dtype=np.uint8)
-    for i, s in enumerate(samples):
-        step = int(_IMA_STEP[idx])
-        diff = int(s) - pred
-        n = 0
-        if diff < 0:
-            n = 8
-            diff = -diff
-        if diff >= step:
-            n |= 4
-            diff -= step
-        step >>= 1
-        if diff >= step:
-            n |= 2
-            diff -= step
-        step >>= 1
-        if diff >= step:
-            n |= 1
-        # reconstruct exactly as the decoder will
-        step = int(_IMA_STEP[idx])
-        rec = step >> 3
-        if n & 1:
-            rec += step >> 2
-        if n & 2:
-            rec += step >> 1
-        if n & 4:
-            rec += step
-        pred = pred - rec if n & 8 else pred + rec
-        pred = max(-32768, min(32767, pred))
-        idx = max(0, min(88, idx + int(_IMA_INDEX[n & 7])))
-        nibbles[i] = n
-    return nibbles, pred, idx
 
 
 def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
@@ -150,105 +60,6 @@ def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def encode_wav_adpcm(
-    samples: np.ndarray, sample_rate: int = 16000, block_words: int = 63
-) -> bytes:
-    """int16 samples → IMA-ADPCM WAV bytes (format tag 0x0011).
-
-    Block layout per the IMA spec: each block opens with a 4-byte header
-    per channel ``(first_sample int16, step_index u8, 0)`` — the header
-    sample is emitted verbatim — then ``block_words`` 4-byte words per
-    channel, round-robined ch0,ch1,…,ch0,…, each word holding 8 nibbles
-    low-nibble-first. ``samples_per_block = 1 + 8*block_words``. The
-    step index persists across blocks (better adaptation) but is
-    re-written into every header, so each block stays independently
-    decodable — the property that makes ADPCM blocks splittable at
-    scale. A ``fact`` chunk pins the true frame count so the zero-padded
-    final block trims exactly on decode.
-    """
-    arr = np.asarray(samples, dtype=np.int16)
-    if arr.ndim == 1:
-        arr = arr[:, None]
-    if arr.ndim != 2 or arr.shape[0] == 0:
-        raise ValueError("samples must be non-empty (n,) or (n, ch)")
-    n_frames, n_ch = arr.shape
-    spb = 1 + 8 * block_words
-    block_align = n_ch * (4 + 4 * block_words)
-    n_blocks = (n_frames + spb - 1) // spb
-    padded = np.zeros((n_blocks * spb, n_ch), dtype=np.int16)
-    padded[:n_frames] = arr
-    if n_frames < n_blocks * spb:
-        padded[n_frames:] = arr[-1]  # hold last sample; avoids a step spike
-    out = bytearray()
-    # Cold-start: seed each channel's step index to the smallest step
-    # covering the opening sample-to-sample delta — the header re-writes
-    # the index anyway, and starting at 0 slew-limits fast signals for
-    # dozens of samples (measured: +10 dB SNR on a 440 Hz sine open).
-    idx = []
-    for c in range(n_ch):
-        d0 = int(abs(int(padded[1, c]) - int(padded[0, c]))) if spb > 1 else 0
-        idx.append(min(88, int(np.searchsorted(_IMA_STEP, max(d0, 7)))))
-    for b in range(n_blocks):
-        blk = padded[b * spb : (b + 1) * spb]
-        chan_nibbles = []
-        for c in range(n_ch):
-            first = int(blk[0, c])
-            out += struct.pack("<hBB", first, idx[c], 0)
-            nibs, _pred, idx[c] = _ima_encode_samples(
-                blk[1:, c], first, idx[c]
-            )
-            chan_nibbles.append(nibs)
-        # pack: words of 8 nibbles, round-robin across channels
-        for w in range(block_words):
-            for c in range(n_ch):
-                n8 = chan_nibbles[c][w * 8 : w * 8 + 8]
-                out += bytes(
-                    (int(n8[k]) | (int(n8[k + 1]) << 4)) for k in (0, 2, 4, 6)
-                )
-    byte_rate = (sample_rate * block_align + spb - 1) // spb
-    fmt = struct.pack(
-        "<HHIIHHHH",
-        _ADPCM_TAG, n_ch, sample_rate, byte_rate, block_align, 4, 2, spb,
-    )  # cbSize=2, wSamplesPerBlock
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"fact" + struct.pack("<II", 4, n_frames)
-    body += b"data" + struct.pack("<I", len(out)) + bytes(out)
-    if len(out) % 2:
-        body += b"\x00"
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def _decode_adpcm_data(
-    pcm: bytes, n_ch: int, block_align: int, n_frames: int | None
-) -> np.ndarray:
-    """IMA-ADPCM data chunk → interleaved int16 (n, ch)."""
-    hdr = 4 * n_ch
-    if block_align <= hdr or (block_align - hdr) % (4 * n_ch):
-        raise ValueError(f"ADPCM block_align {block_align} invalid for {n_ch} ch")
-    words_per_ch = (block_align - hdr) // (4 * n_ch)
-    spb = 1 + 8 * words_per_ch
-    n_blocks = len(pcm) // block_align
-    chans = [[] for _ in range(n_ch)]
-    for b in range(n_blocks):
-        blk = pcm[b * block_align : (b + 1) * block_align]
-        data = np.frombuffer(blk[hdr:], dtype=np.uint8).reshape(-1, 4)
-        for c in range(n_ch):
-            pred, idx, _r = struct.unpack("<hBB", blk[4 * c : 4 * c + 4])
-            idx = max(0, min(88, idx))
-            raw = data[c::n_ch].reshape(-1)  # this channel's bytes in order
-            nibs = np.empty(raw.size * 2, dtype=np.uint8)
-            nibs[0::2] = raw & 0x0F  # low nibble first
-            nibs[1::2] = raw >> 4
-            dec, _p, _i = _ima_decode_nibbles(nibs, pred, idx)
-            chans[c].append(np.concatenate(([np.int16(pred)], dec)))
-    if not chans[0]:
-        return np.zeros((0, n_ch), dtype=np.int16)
-    out = np.stack([np.concatenate(ch) for ch in chans], axis=1)
-    if n_frames is not None:
-        out = out[:n_frames]
-    return out
-
-
 def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
     """WAV bytes → (samples float32 in [-1, 1] shaped (n, ch), sample_rate).
 
@@ -261,7 +72,6 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
         raise ValueError("not a RIFF/WAVE stream (bad magic)")
     pos, end = 12, min(len(data), 8 + struct.unpack("<I", data[4:8])[0])
     fmt_tag = n_ch = rate = bits = None
-    block_align = fact_frames = None
     pcm = None
     while pos + 8 <= end:
         cid = data[pos : pos + 4]
@@ -274,15 +84,13 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
             # instead of the clean ValueError the executor contract needs
             if len(chunk) < 16:
                 raise ValueError("WAV fmt chunk truncated")
-            fmt_tag, n_ch, rate, _br, block_align, bits = struct.unpack(
+            fmt_tag, n_ch, rate, _br, _align, bits = struct.unpack(
                 "<HHIIHH", chunk[:16]
             )
             if fmt_tag == _EXTENSIBLE_TAG and len(chunk) >= 26:
                 # WAVE_FORMAT_EXTENSIBLE: the real tag is the first word
                 # of the 16-byte SubFormat GUID at offset 24.
                 (fmt_tag,) = struct.unpack("<H", chunk[24:26])
-        elif cid == b"fact" and len(chunk) >= 4:
-            (fact_frames,) = struct.unpack("<I", chunk[:4])
         elif cid == b"data":
             if fmt_tag is None:
                 raise ValueError("WAV data chunk before fmt chunk")
@@ -317,122 +125,14 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
         arr = np.frombuffer(pcm, dtype="<f4").astype(np.float32)
     elif fmt_tag == _FLOAT_TAG and bits == 64:
         arr = np.frombuffer(pcm, dtype="<f8").astype(np.float32)
-    elif fmt_tag in (_ULAW_TAG, _ALAW_TAG):
-        if bits != 8:
-            raise ValueError(f"G.711 requires 8-bit codes, got {bits}")
-        table = _ULAW_DEC if fmt_tag == _ULAW_TAG else _ALAW_DEC
-        arr = table[np.frombuffer(pcm, dtype=np.uint8)].astype(
-            np.float32
-        ) / 32768.0
-    elif fmt_tag == _ADPCM_TAG:
-        if bits not in (3, 4):
-            raise NotImplementedError(f"IMA ADPCM {bits}-bit (only 4-bit here)")
-        if bits == 3:
-            raise NotImplementedError("IMA ADPCM 3-bit nibbles")
-        if n_ch is None or n_ch < 1:
-            raise ValueError("WAV fmt declares zero channels")
-        frames = _decode_adpcm_data(pcm, n_ch, block_align, fact_frames)
-        return frames.astype(np.float32) / 32768.0, rate
     else:
         raise NotImplementedError(
             f"no codec for WAV format tag 0x{fmt_tag:04x}/{bits}-bit here "
-            "(built-in covers integer PCM, float32 and IMA ADPCM; plug "
-            "ffmpeg/torchaudio for perceptual encodings)"
+            "(built-in covers integer PCM and IEEE float; plug "
+            "ffmpeg/torchaudio for compressed encodings)"
         )
     if n_ch < 1:
         raise ValueError("WAV fmt declares zero channels")
     n = len(arr) - len(arr) % n_ch
     return arr[:n].reshape(-1, n_ch), rate
 
-
-# ---------------------------------------------------------------------------
-# G.711 companding (A-law / µ-law, format tags 0x0006 / 0x0007) — the
-# telephony codecs every call-center/voice crawl contains. Tables per the
-# classic Sun g711.c segment layout (the same reference CPython's audioop
-# implements); both directions are differential-tested against audioop
-# over the FULL domain (all 256 code bytes, all 65536 linear inputs) in
-# tests/test_codec_differential.py.
-# ---------------------------------------------------------------------------
-
-_ULAW_BIAS = 0x84
-
-
-def _ulaw_decode_table() -> np.ndarray:
-    u = ~np.arange(256, dtype=np.int32) & 0xFF
-    t = ((u & 0x0F) << 3) + _ULAW_BIAS
-    t <<= (u & 0x70) >> 4
-    return np.where(u & 0x80, _ULAW_BIAS - t, t - _ULAW_BIAS).astype(np.int16)
-
-
-def _alaw_decode_table() -> np.ndarray:
-    a = np.arange(256, dtype=np.int32) ^ 0x55
-    t = (a & 0x0F) << 4
-    seg = (a & 0x70) >> 4
-    t = np.where(seg == 0, t + 8, np.where(seg == 1, t + 0x108,
-                 (t + 0x108) << np.maximum(seg - 1, 0)))
-    return np.where(a & 0x80, t, -t).astype(np.int16)
-
-
-_ULAW_DEC = _ulaw_decode_table()
-_ALAW_DEC = _alaw_decode_table()
-
-
-def _lin2ulaw(samples: np.ndarray) -> np.ndarray:
-    """int16 → µ-law code bytes (vectorized Sun-layout encoder)."""
-    x = samples.astype(np.int32) >> 2  # 14-bit domain
-    mask = np.where(x < 0, 0x7F, 0xFF)
-    x = np.abs(x)
-    x = np.minimum(x, 8159) + (_ULAW_BIAS >> 2)
-    # segment = index of the first end >= x over {0x3F,0x7F,...,0x1FFF}
-    seg = np.searchsorted(
-        np.array([0x3F, 0x7F, 0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF, 0x1FFF]),
-        x,
-    )
-    uval = (seg << 4) | ((x >> (seg + 1)) & 0x0F)
-    return (np.where(seg >= 8, 0x7F, uval) ^ mask).astype(np.uint8)
-
-
-def _lin2alaw(samples: np.ndarray) -> np.ndarray:
-    """int16 → A-law code bytes (vectorized Sun-layout encoder)."""
-    x = samples.astype(np.int32) >> 3  # 13-bit domain
-    mask = np.where(x >= 0, 0xD5, 0x55)
-    x = np.where(x >= 0, x, -x - 1)
-    seg = np.searchsorted(
-        np.array([0x1F, 0x3F, 0x7F, 0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF]),
-        x,
-    )
-    shift = np.where(seg < 2, 1, seg)
-    aval = (seg << 4) | ((x >> shift) & 0x0F)
-    return (np.where(seg >= 8, 0x7F, aval) ^ mask).astype(np.uint8)
-
-
-def encode_wav_g711(
-    samples: np.ndarray, sample_rate: int = 8000, law: str = "ulaw"
-) -> bytes:
-    """int16 samples, (n,) mono or (n, ch) → G.711 WAV bytes (tag
-    0x0007 µ-law / 0x0006 A-law, 8 bits per companded sample).
-
-    The fixture generator for the telephony decode path; includes the
-    ``fact`` chunk real writers emit for compressed formats."""
-    arr = np.asarray(samples, dtype=np.int16)
-    if arr.ndim == 1:
-        arr = arr[:, None]
-    if arr.ndim != 2:
-        raise ValueError(f"samples must be (n,) or (n, ch), got ndim={arr.ndim}")
-    if law == "ulaw":
-        tag, codes = _ULAW_TAG, _lin2ulaw(arr.reshape(-1))
-    elif law == "alaw":
-        tag, codes = _ALAW_TAG, _lin2alaw(arr.reshape(-1))
-    else:
-        raise ValueError(f"law must be 'ulaw' or 'alaw', got {law!r}")
-    n_ch = arr.shape[1]
-    data = codes.tobytes()
-    fmt = struct.pack(
-        "<HHIIHH", tag, n_ch, sample_rate, sample_rate * n_ch, n_ch, 8
-    )
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"fact" + struct.pack("<II", 4, arr.shape[0])
-    body += b"data" + struct.pack("<I", len(data)) + data
-    if len(data) % 2:
-        body += b"\x00"
-    return b"RIFF" + struct.pack("<I", len(body)) + body

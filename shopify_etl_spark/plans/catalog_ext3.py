@@ -496,44 +496,6 @@ def training_sequence_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "jpeg_roundtrip_stats",
-    # The synth formula (multimodal.jpeg_roundtrip_stats) regenerated in
-    # SQL for geometry; the pixels are NOT SQL-recoverable (lossy DCT
-    # quantization), so quality verifies through the guarantee-gate
-    # flags: a smooth gradient at quality 90 must round-trip within
-    # MAE<=4 / PSNR>=30, and the dims must survive exactly. Every step
-    # is a deterministic pure function of doc_id — flags are stable
-    # across partitionings, so the oracle asserts them literally.
-    oracle="""
-    SELECT doc_id AS asset_id,
-           CAST(24 + doc_id % 9 AS BIGINT) AS width,
-           CAST(24 + doc_id % 7 AS BIGINT) AS height,
-           CAST((24 + doc_id % 9) * (24 + doc_id % 7) AS BIGINT) AS n_pixels,
-           TRUE AS dims_match,
-           TRUE AS mae_le_4,
-           TRUE AS psnr_ge_30
-    FROM documents
-    """,
-    doc="Lossy-codec round-trip gate — the baseline-JPEG twin of the "
-    "lossless image_decode_stats pipeline: deterministic gradient "
-    "raster synthesis -> REAL baseline JPEG encode (Annex K Huffman, "
-    "IJG quality scaling, byte stuffing) -> REAL Huffman+IDCT decode "
-    "-> geometry + quality flags. Pixels are unrecoverable in SQL by "
-    "the nature of the codec, so the oracle regenerates the geometry "
-    "and asserts the by-construction quality bounds (the "
-    "approx_event_stats pattern); a decoder that drops a block, "
-    "mis-predicts a DC, or breaks the upsample path fails the flags. "
-    "Zero shuffles: one narrow mapInPandas chain. "
-    "operators/jpeg_codec.py, operators/multimodal.py.",
-)
-def jpeg_roundtrip_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal
-
-    docs = load_table(spark, sf_dir, "documents")
-    return multimodal.jpeg_roundtrip_stats(docs)
-
-
-@register(
     "pagerank_degree_capped",
     oracle=r"""
     WITH toks AS (

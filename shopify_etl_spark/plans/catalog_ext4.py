@@ -243,80 +243,6 @@ def knn_label_disagreement_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "adpcm_roundtrip_stats",
-    # Geometry regenerated in SQL; the samples are NOT SQL-recoverable
-    # (stateful 4-bit quantizer), so quality verifies through the
-    # guarantee-gate flags, exactly like jpeg_roundtrip_stats: a
-    # band-limited tone must survive IMA ADPCM at >= 20 dB SNR and ~4:1
-    # size, and the fact-chunk trim must preserve the frame count.
-    oracle="""
-    SELECT doc_id AS asset_id,
-           CAST(400 + doc_id % 211 AS BIGINT) AS n_frames,
-           CAST(1 + doc_id % 2 AS BIGINT) AS n_channels,
-           TRUE AS frames_match,
-           TRUE AS snr_ge_20,
-           TRUE AS ratio_le_045
-    FROM documents
-    """,
-    doc="Lossy-audio round-trip gate — the IMA-ADPCM twin of "
-    "jpeg_roundtrip_stats, closing the compressed-audio seam: "
-    "deterministic tone synthesis -> REAL block-structured IMA ADPCM "
-    "encode (per-channel headers, nibble words, fact chunk) -> REAL "
-    "decode -> geometry + quality flags (frame count exact, SNR >= 20 "
-    "dB, size <= 0.45x PCM — sub-second clips pay real per-block header/padding overhead). Samples are unrecoverable in SQL by the "
-    "nature of the codec, so the oracle regenerates the geometry and "
-    "asserts the by-construction bounds (the guarantee-gate pattern); "
-    "an encoder that breaks block independence, drops the final "
-    "partial block, or mis-tracks the quantizer state fails the "
-    "flags. Zero shuffles: one narrow mapInPandas chain. "
-    "operators/wav_codec.py, operators/multimodal.py.",
-)
-def adpcm_roundtrip_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal
-
-    docs = load_table(spark, sf_dir, "documents")
-    return multimodal.adpcm_roundtrip_stats(docs)
-
-
-@register(
-    "progressive_jpeg_stats",
-    # Geometry regenerated in SQL; pixels are NOT SQL-recoverable (lossy
-    # DCT), so correctness verifies through guarantee-gate flags — and
-    # the headline flag is STRUCTURAL: progressive (SOF2) and baseline
-    # (SOF0) encode quantize to IDENTICAL coefficients and the 10-scan
-    # progressive script transmits every bit of them, so the multi-scan
-    # decode must equal the sequential decode bit-for-bit. Verified
-    # exhaustively over the full synth geometry domain (9 x 7 x 97
-    # combos) before the blanket-TRUE oracle shipped.
-    oracle="""
-    SELECT doc_id AS asset_id,
-           CAST(24 + doc_id % 9 AS BIGINT) AS width,
-           CAST(24 + doc_id % 7 AS BIGINT) AS height,
-           TRUE AS dims_match,
-           TRUE AS matches_sequential,
-           TRUE AS psnr_ge_30
-    FROM documents
-    """,
-    doc="Progressive-JPEG cross-path gate, closing the SOF2 seam: "
-    "deterministic gradient synthesis -> REAL progressive encode "
-    "(libjpeg-style scan script: interleaved DC first, spectral-split "
-    "AC first scans, two AC refinement bit-planes, DC refinement) -> "
-    "REAL coefficient-accumulating multi-scan decode -> flags. "
-    "matches_sequential pins bit-exact agreement with the baseline "
-    "path on every block — a decoder that mis-walks an EOB run, a "
-    "refinement correction bit, or a bit-plane shift cannot pass. "
-    "Zero shuffles: one narrow mapInPandas chain. "
-    "operators/jpeg_codec.py (encode_jpeg_progressive, Annex G "
-    "decode), operators/multimodal.py::progressive_jpeg_stats.",
-)
-def progressive_jpeg_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal
-
-    docs = load_table(spark, sf_dir, "documents")
-    return multimodal.progressive_jpeg_stats(docs)
-
-
-@register(
     "document_chunks",
     oracle=r"""
     WITH d AS (
@@ -476,45 +402,6 @@ def retrieval_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_tokens").cast("long").alias("sum_tokens"),
         F.round(F.avg("sim"), 4).alias("avg_sim"),
     )
-
-
-@register(
-    "arith_jpeg_stats",
-    # Geometry regenerated in SQL; pixels are NOT SQL-recoverable (lossy
-    # DCT + adaptive entropy coding), so correctness verifies through
-    # guarantee-gate flags — and the headline flag is STRUCTURAL:
-    # arithmetic (SOF9) and Huffman (SOF0) encode transmit IDENTICAL
-    # quantized coefficients, so the QM-coder decode must equal the
-    # Huffman decode bit-for-bit. Verified exhaustively over the full
-    # synth geometry domain (lcm(9,7,97) = 6111 combos, zero failures
-    # on all four flags) before the blanket-TRUE oracle shipped.
-    oracle="""
-    SELECT doc_id AS asset_id,
-           CAST(24 + doc_id % 9 AS BIGINT) AS width,
-           CAST(24 + doc_id % 7 AS BIGINT) AS height,
-           TRUE AS dims_match,
-           TRUE AS matches_huffman,
-           TRUE AS smaller_than_huffman,
-           TRUE AS psnr_ge_30
-    FROM documents
-    """,
-    doc="Arithmetic-JPEG cross-path gate, closing the SOF9 entropy seam "
-    "(VERDICT r10 #7): deterministic gradient synthesis -> REAL "
-    "QM-coder encode (T.81 Annex D state machine, Annex F.1.4 DC/AC "
-    "statistical model, carry/byte-stuffing pipeline) -> REAL adaptive "
-    "decode -> flags. matches_huffman pins bit-exact agreement with "
-    "the Huffman path on every pixel — a decoder that mis-tracks a "
-    "context bin, a carry ripple, or a conditioning category cannot "
-    "pass; smaller_than_huffman pins the adaptation actually beating "
-    "the static Annex-K tables. Zero shuffles: one narrow mapInPandas "
-    "chain. operators/jpeg_codec.py (encode_jpeg_arith, "
-    "_decode_scan_arith), operators/multimodal.py::arith_jpeg_stats.",
-)
-def arith_jpeg_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal
-
-    docs = load_table(spark, sf_dir, "documents")
-    return multimodal.arith_jpeg_stats(docs)
 
 
 @register(
@@ -702,42 +589,6 @@ def embedding_outlier_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "gif_roundtrip_stats",
-    # Geometry regenerated in SQL; pixels ARE recoverable in principle
-    # (GIF is lossless) but the palette gather lives in numpy — the
-    # guarantee-gate flags carry the contract, and matches_source is
-    # EXACT equality, stronger than the JPEG family's PSNR rider.
-    # Verified exhaustively over 8192 synthesis keys (every geometry /
-    # palette-phase / interlace combination repeats well inside that
-    # sweep) with zero failures before the blanket-TRUE oracle shipped.
-    oracle="""
-    SELECT doc_id AS asset_id,
-           CAST(8 + doc_id % 6 AS BIGINT) AS width,
-           CAST(6 + doc_id % 5 AS BIGINT) AS height,
-           CAST(2 + doc_id % 31 AS BIGINT) AS n_colors,
-           doc_id % 2 = 1 AS interlaced,
-           TRUE AS dims_match,
-           TRUE AS matches_source
-    FROM documents
-    """,
-    doc="GIF round-trip gate — the LOSSLESS legacy-web-image twin of "
-    "image_decode_stats: deterministic palette + index-raster "
-    "synthesis -> REAL LZW encode (variable code width, table-full "
-    "clear; interlaced on odd keys so both row orders run) -> REAL "
-    "decode -> EXACT pixel-equality flag. An LZW width-growth slip, a "
-    "wrong interlace pass, or a palette offset cannot pass. Zero "
-    "shuffles: one narrow mapInPandas chain. "
-    "operators/gif_codec.py, operators/multimodal.py::"
-    "gif_roundtrip_stats.",
-)
-def gif_roundtrip_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal
-
-    docs = load_table(spark, sf_dir, "documents")
-    return multimodal.gif_roundtrip_stats(docs)
-
-
 def _retrieval_trained_oracle() -> str:
     """Unrolled-Lloyd oracle for the TRAINED retrieval chain: the chunk +
     hash-embed CTEs from retrieval_chunk_search feed the kmeans twin's
@@ -881,135 +732,3 @@ def retrieval_trained_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split("ck", ":")[1].cast("long").alias("neighbor_chunk"),
         "cosine_sim",
     )
-
-
-@register(
-    "lossless_jpeg_stats",
-    # Geometry AND the decoded-pixel sum regenerated in SQL — lossless
-    # means the pixels ARE SQL-recoverable (unlike the DCT family), so
-    # this gate is value-exact like image_decode_stats, with the
-    # matches_source flag on top. The blanket-TRUE flag is backed by an
-    # exhaustive pre-ship sweep over the synthesis-key domain (lcm of
-    # all periods = 140; 280 keys = 2 full periods, zero failures).
-    oracle="""
-    WITH p AS (
-      SELECT doc_id AS d, 8 + doc_id % 7 AS w, 6 + doc_id % 5 AS h,
-             CASE WHEN doc_id % 4 = 0 THEN 16 ELSE 8 END AS prec,
-             1 + doc_id % 7 AS pred,
-             1 + 2 * (doc_id % 2) AS nch
-      FROM documents
-    ), px AS (
-      SELECT p.d, p.w, p.h, p.prec, p.pred, p.nch,
-             ((p.d * 31 + r.r * 17 + c.c * 7 + k.k * 13)
-               % CASE WHEN p.prec = 16 THEN 65536 ELSE 256 END) AS v
-      FROM p, UNNEST(range(p.h)) AS r(r), UNNEST(range(p.w)) AS c(c),
-           UNNEST(range(p.nch)) AS k(k)
-    )
-    SELECT d AS asset_id,
-           CAST(ANY_VALUE(w) AS BIGINT) AS width,
-           CAST(ANY_VALUE(h) AS BIGINT) AS height,
-           CAST(ANY_VALUE(prec) AS BIGINT) AS prec_bits,
-           CAST(ANY_VALUE(pred) AS BIGINT) AS predictor,
-           CAST(ANY_VALUE(nch) AS BIGINT) AS n_channels,
-           CAST(SUM(v) AS BIGINT) AS sample_sum,
-           TRUE AS matches_source
-    FROM px GROUP BY d
-    """,
-    doc="Lossless-JPEG round-trip gate (SOF3, T.81 Annex H — r12): "
-    "deterministic raster synthesis -> REAL predictive encode (all 7 "
-    "H.1.2 predictors across keys, 8- and 16-bit precision, gray and "
-    "3-channel, interleaved and one-scan-per-component) -> REAL decode "
-    "-> EXACT equality flag + the decoded pixels' integer sum. The "
-    "oracle recomputes the sum from the synthesis formula in SQL "
-    "(lossless = pixels are SQL-recoverable, the stronger "
-    "image_decode_stats discipline, not the DCT family's PSNR rider), "
-    "so a decoder that misreads one sample value-mismatches. Zero "
-    "shuffles: one narrow mapInPandas chain. "
-    "operators/jpeg_codec.py (encode_jpeg_lossless, "
-    "_decode_scan_lossless), operators/multimodal.py::"
-    "lossless_jpeg_stats.",
-)
-def lossless_jpeg_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal
-
-    docs = load_table(spark, sf_dir, "documents")
-    return multimodal.lossless_jpeg_stats(docs)
-
-
-@register(
-    "g711_roundtrip_stats",
-    # Geometry regenerated in SQL; companded samples are lossy (8-bit
-    # log codes), so correctness rides on guarantee-gate flags — and the
-    # codec behind them is differential-verified against CPython's own
-    # audioop over the FULL domain (every code byte, every int16; see
-    # tests/test_codec_differential.py), a stronger external check than
-    # any sampled oracle. Blanket-TRUE flags verified exhaustively over
-    # the synthesis-key domain (lcm(173, 2, 40) = 6920 keys, zero
-    # failures; worst SNR 36.71 dB vs the 30 gate, worst ratio 0.5543
-    # vs 0.56, worst error 257 vs 512) before shipping.
-    oracle="""
-    SELECT doc_id AS asset_id,
-           CAST(300 + doc_id % 173 AS BIGINT) AS n_frames,
-           CAST(1 + doc_id % 2 AS BIGINT) AS n_channels,
-           CASE WHEN doc_id % 2 = 0 THEN 'ulaw' ELSE 'alaw' END AS law,
-           TRUE AS frames_match,
-           TRUE AS snr_ge_30,
-           TRUE AS ratio_half_pcm,
-           TRUE AS err_le_segment
-    FROM documents
-    """,
-    doc="G.711 telephony round-trip gate (format tags 0x0007/0x0006 — "
-    "r12): deterministic tone synthesis -> REAL vectorized µ-law/A-law "
-    "companding (Sun segment layout; µ-law even keys, A-law odd) -> "
-    "expand -> flags (exact frame geometry; SNR >= 30 dB; container "
-    "<= 0.56x the PCM16 encoding; per-sample error within the "
-    "amplitude's companding segment step). The codec is additionally "
-    "differential-pinned against stdlib audioop over the FULL input "
-    "domain. Zero shuffles: one narrow mapInPandas chain. "
-    "operators/wav_codec.py (G.711 section), operators/multimodal.py::"
-    "g711_roundtrip_stats.",
-)
-def g711_roundtrip_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal
-
-    docs = load_table(spark, sf_dir, "documents")
-    return multimodal.g711_roundtrip_stats(docs)
-
-
-@register(
-    "prog_arith_jpeg_stats",
-    # Pixels are not SQL-recoverable (lossy DCT + adaptive entropy
-    # coding), so correctness rides on guarantee-gate flags, and the
-    # headline flag is STRUCTURAL: all four DCT encoders share one
-    # coefficient front half, so the SOF10 decode must equal the SOF0
-    # Huffman decode bit-for-bit. Verified exhaustively over the full
-    # synth geometry domain (lcm(9, 7, 97) = 6111 keys, zero failures
-    # on all four flags) before the blanket-TRUE oracle shipped.
-    oracle="""
-    SELECT doc_id AS asset_id,
-           CAST(24 + doc_id % 9 AS BIGINT) AS width,
-           CAST(24 + doc_id % 7 AS BIGINT) AS height,
-           TRUE AS dims_match,
-           TRUE AS matches_baseline,
-           TRUE AS smaller_than_prog_huffman,
-           TRUE AS psnr_ge_30
-    FROM documents
-    """,
-    doc="Progressive-arithmetic JPEG gate (SOF10 — r12), completing the "
-    "DCT-mode matrix the engine decodes: deterministic gradient "
-    "synthesis -> T.81 Annex G scan script entropy-coded by the REAL "
-    "QM-coder with the G.3 statistical models (per-band EOB decisions, "
-    "fixed-bin DC refinement bits, correction/newly-significant AC "
-    "refinement) -> real decode -> flags. matches_baseline pins "
-    "bit-exact agreement with the sequential Huffman path; "
-    "smaller_than_prog_huffman pins the adaptation beating the static "
-    "Annex-K tables on the same scan script. Zero shuffles: one narrow "
-    "mapInPandas chain. operators/jpeg_codec.py "
-    "(encode_jpeg_arith_progressive, _decode_scan_progressive_arith), "
-    "operators/multimodal.py::prog_arith_jpeg_stats.",
-)
-def prog_arith_jpeg_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal
-
-    docs = load_table(spark, sf_dir, "documents")
-    return multimodal.prog_arith_jpeg_stats(docs)

@@ -837,127 +837,6 @@ def quality_probe_distill_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "arith_lossless_jpeg_stats",
-    # Geometry AND the decoded-pixel sum regenerated in SQL — lossless
-    # means the pixels ARE SQL-recoverable, the same value-exact
-    # discipline as lossless_jpeg_stats. Blanket-TRUE flags backed by an
-    # exhaustive pre-ship sweep over the synthesis-key domain (lcm of
-    # all periods = 4620 keys, zero failures on both flags).
-    oracle="""
-    WITH p AS (
-      SELECT doc_id AS d, 8 + doc_id % 7 AS w, 6 + doc_id % 5 AS h,
-             CASE WHEN doc_id % 4 = 0 THEN 16 ELSE 8 END AS prec,
-             1 + doc_id % 7 AS pred,
-             1 + 2 * (doc_id % 2) AS nch,
-             CASE WHEN doc_id % 3 = 0 THEN 1 + doc_id % 11 ELSE 0 END
-               AS rst
-      FROM documents
-    ), px AS (
-      SELECT p.d, p.w, p.h, p.prec, p.pred, p.nch, p.rst,
-             ((p.d * 31 + r.r * 17 + c.c * 7 + k.k * 13)
-               % CASE WHEN p.prec = 16 THEN 65536 ELSE 256 END) AS v
-      FROM p, UNNEST(range(p.h)) AS r(r), UNNEST(range(p.w)) AS c(c),
-           UNNEST(range(p.nch)) AS k(k)
-    )
-    SELECT d AS asset_id,
-           CAST(ANY_VALUE(w) AS BIGINT) AS width,
-           CAST(ANY_VALUE(h) AS BIGINT) AS height,
-           CAST(ANY_VALUE(prec) AS BIGINT) AS prec_bits,
-           CAST(ANY_VALUE(pred) AS BIGINT) AS predictor,
-           CAST(ANY_VALUE(nch) AS BIGINT) AS n_channels,
-           CAST(ANY_VALUE(rst) AS BIGINT) AS restart_mcus,
-           CAST(SUM(v) AS BIGINT) AS sample_sum,
-           TRUE AS matches_source,
-           TRUE AS agrees_with_huffman_path
-    FROM px GROUP BY d
-    """,
-    doc="Arithmetic-lossless JPEG gate (SOF11 — r13), completing the "
-    "non-hierarchical T.81 mode matrix: deterministic raster synthesis "
-    "-> REAL predictive encode entropy-coded by the QM-coder with the "
-    "H.1.2 two-dimensional conditioning model (25 Da/Db classification "
-    "contexts + dual magnitude bin sets, the 158-bin statistics area) "
-    "-> real decode -> EXACT equality flags + the decoded pixels' "
-    "integer sum, recomputed from the synthesis formula in SQL. "
-    "Exercises all 7 predictors, 8/16-bit, gray/3-channel, interleaved "
-    "and one-scan-per-component, restart intervals (coder + statistics "
-    "+ class grids + prediction anchor reset per segment) and "
-    "non-default DAC conditioning; agrees_with_huffman_path pins the "
-    "SOF3 and SOF11 entropy layers against each other on every key. "
-    "Zero shuffles: one narrow mapInPandas chain. "
-    "operators/jpeg_codec.py (encode_jpeg_lossless_arith, "
-    "_decode_scan_lossless_arith), operators/multimodal.py::"
-    "arith_lossless_jpeg_stats.",
-)
-def arith_lossless_jpeg_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal
-
-    docs = load_table(spark, sf_dir, "documents")
-    return multimodal.arith_lossless_jpeg_stats(docs)
-
-
-@register(
-    "hier_jpeg_stats",
-    # Value-exact like lossless_jpeg_stats: the differential lossless
-    # refinement corrects every sample, so even over a LOSSY baseline
-    # base the decode equals the source and the pixel sum is
-    # SQL-recoverable. Blanket-TRUE flag backed by an exhaustive
-    # pre-ship sweep over the synthesis-key domain (lcm = 2520 keys,
-    # zero failures).
-    oracle="""
-    WITH p AS (
-      SELECT doc_id AS d, 16 + doc_id % 9 AS w, 16 + doc_id % 7 AS h,
-             CASE WHEN doc_id % 8 = 1 THEN 16 ELSE 8 END AS prec,
-             1 + 2 * (doc_id % 2) AS nch,
-             CASE WHEN doc_id % 4 = 0 AND doc_id % 3 = 0 THEN 2
-                  ELSE 1 + doc_id % 3 END AS lv,
-             CASE doc_id % 4 WHEN 0 THEN 'baseline'
-                             WHEN 2 THEN 'lossless_arith'
-                             ELSE 'lossless' END AS base,
-             doc_id % 12 IN (2, 8) AS dct
-      FROM documents
-    ), px AS (
-      SELECT p.d, p.w, p.h, p.prec, p.nch, p.lv, p.base, p.dct,
-             ((p.d * 31 + r.r * 17 + c.c * 7 + k.k * 13)
-               % CASE WHEN p.prec = 16 THEN 65536 ELSE 256 END) AS v
-      FROM p, UNNEST(range(p.h)) AS r(r), UNNEST(range(p.w)) AS c(c),
-           UNNEST(range(p.nch)) AS k(k)
-    )
-    SELECT d AS asset_id,
-           CAST(ANY_VALUE(w) AS BIGINT) AS width,
-           CAST(ANY_VALUE(h) AS BIGINT) AS height,
-           CAST(ANY_VALUE(prec) AS BIGINT) AS prec_bits,
-           CAST(ANY_VALUE(nch) AS BIGINT) AS n_channels,
-           CAST(ANY_VALUE(lv) AS BIGINT) AS levels,
-           ANY_VALUE(base) AS base_mode,
-           ANY_VALUE(dct) AS dct_rung,
-           CAST(SUM(v) AS BIGINT) AS sample_sum,
-           TRUE AS matches_source
-    FROM px GROUP BY d
-    """,
-    doc="Hierarchical JPEG gate (T.81 Annex J — r13): deterministic "
-    "raster synthesis -> REAL DHP/EXP pyramid encode (baseline-lossy / "
-    "SOF3 / SOF11 base frames x SOF7/SOF15 differential lossless "
-    "refinements, plus LOSSY differential sequential-DCT intermediate "
-    "rungs — SOF5 Huffman / SOF13 QM — on the dct_rung keys, corrected "
-    "exactly by the finest lossless rung; 1-3 levels, gray/RGB, "
-    "8/16-bit, all predictors "
-    "cycled) -> real decode (EXP reference expansion per J.1.1.2, "
-    "mod-2^16 differential accumulation) -> EXACT equality flag + the "
-    "decoded pixels' integer sum recomputed from the synthesis formula "
-    "in SQL — the refinement frame corrects every sample, so the gate "
-    "stays value-exact even over a lossy base. Zero shuffles: one "
-    "narrow mapInPandas chain. operators/jpeg_codec.py "
-    "(encode_jpeg_hierarchical, _exp_expand, finalize_frame), "
-    "operators/multimodal.py::hier_jpeg_stats.",
-)
-def hier_jpeg_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal
-
-    docs = load_table(spark, sf_dir, "documents")
-    return multimodal.hier_jpeg_stats(docs)
-
-
 # ---------------------------------------------------------------------------
 # ANN-prefiltered late interaction: the IVF-bounded MaxSim serving shape
 # (operators/similarity.py::maxsim_pruned_topk). The fixed pure-salt

@@ -4,7 +4,8 @@ The r17 gate re-built and re-planned every catalog builder per test —
 ~680 builder invocations across test_plan_gate's parametrized tests and
 its three whole-catalog loops, plus another full-catalog build in
 test_catalog_extras — which blew the driver's verify budget
-(VERIFY_r17: pytest truncated at 81%, tests_ok=false). Every consumer
+(VERIFY_r17, at 1814ba1 in git history: pytest truncated at 81%,
+tests_ok=false). Every consumer
 is a pure function of the formatted plan STRING, the captured subtree
 plan strings, and the builder's column list, so ONE build per query
 feeds them all: the session-scoped ``catalog_plans`` fixture

@@ -13,8 +13,9 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="session")
 def spark():
     # local[8] (was local[4] through r17): the suite must finish inside
-    # the driver's verify budget (VERIFY_r17 truncated at 81%), and the
-    # Spark-bound e2e tests scale with session cores on the 32-core box.
+    # the verify budget (VERIFY_r17, at 1814ba1 in git history, truncated
+    # at 81%), and the Spark-bound e2e tests scale with session cores on
+    # the 32-core box.
     # shuffle_partitions stays 4 — plan shapes and AQE sizing unchanged.
     spark = get_spark("tests", master="local[8]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")

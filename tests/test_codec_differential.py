@@ -1,17 +1,16 @@
 """Independent-decoder differentials for the codec family.
 
 Every other codec gate in this repo is cross-path WITHIN the repo
-(arithmetic-vs-Huffman, progressive-vs-sequential, encode→decode round
-trips, PSNR riders). Those catch nearly everything EXCEPT a systematic
-error shared by both paths — a wrong color-convert constant, a
-transposed zigzag that cancels on the round trip. This module closes
+(progressive-vs-sequential, interleaved-vs-non-interleaved,
+encode→decode round trips, PSNR riders). Those catch nearly everything
+EXCEPT a systematic error shared by both paths — a wrong color-convert
+constant, a transposed zigzag that cancels on the round trip. This module closes
 that blind spot with decoders this repo did not write:
 
 * stdlib ``wave`` (always importable): exact PCM16 agreement in both
-  directions — the differential that runs in every environment;
-* stdlib ``audioop`` (present through 3.12): G.711 µ-law/A-law
-  companding vs CPython's own tables — FULL-domain (every code byte,
-  every int16), both directions;
+  directions — the differential that runs in every environment (the
+  WAV codec decodes PCM and IEEE float only, so there is no companding
+  or ADPCM path left to compare against stdlib ``audioop``);
 * Pillow (preferred when importable — the same import-try seam as the
   pyav demux path, ``multimodal.py``): exact equality for the lossless
   codecs (PNG in both directions; GIF stills, interlace, animations)
@@ -36,11 +35,13 @@ an EOB-refinement bug this differential exposed while being built).
 ``HAVE_PIL`` records which backend ran.
 
 Paths NOT externally differentialed (documented, with reasons):
-arithmetic JPEG (no public Python package decodes SOF9 — that gap is
-why the codec exists here; its gate is bit-exactness against the
-Huffman twin, which Pillow DOES differential), IMA-ADPCM blocks
-(stdlib ``audioop.adpcm2lin`` is the headerless DVI variant — a
-different framing, not a comparable oracle), and Y4M (no stdlib or
+12-bit JPEG (Pillow and the clean-room reference decode 8-bit samples
+only; its gate is bit-exactness between the sequential and progressive
+paths, whose 8-bit twins Pillow DOES differential), lossless and
+hierarchical JPEG (Pillow decodes neither; their gate is the exact round
+trip against this repo's encoders), WAV other than 16-bit PCM (the
+stdlib differential pins the 16-bit layout the encoder writes, and
+stdlib ``wave`` has no IEEE-float support), and Y4M (no stdlib or
 Pillow decoder).
 """
 
@@ -325,72 +326,3 @@ class TestPillowJPEG:
         )
         theirs = np.asarray(PILImage.open(buf).convert("RGB"))
         _jpeg_agree(theirs, decode_jpeg(buf.getvalue()), _JPEG_TOL_RGB)
-
-
-try:
-    import warnings as _warnings
-
-    with _warnings.catch_warnings():
-        _warnings.simplefilter("ignore", DeprecationWarning)
-        import audioop  # removed in Python 3.13
-
-    HAVE_AUDIOOP = True
-except ImportError:  # pragma: no cover - environment-dependent
-    HAVE_AUDIOOP = False
-
-needs_audioop = pytest.mark.skipif(
-    not HAVE_AUDIOOP,
-    reason="stdlib audioop removed (3.13+) — G.711 differential skipped; "
-    "the in-repo round-trip tests still cover the codec",
-)
-
-
-@needs_audioop
-class TestStdlibG711Differential:
-    """G.711 companding vs CPython's audioop — FULL-domain equality (all
-    256 code bytes, all 65536 linear inputs), not samples: companding
-    tables have segment boundaries a random probe can miss."""
-
-    def test_decode_tables_match_audioop_exactly(self):
-        from shopify_etl_spark.operators.wav_codec import _ALAW_DEC, _ULAW_DEC
-
-        codes = bytes(range(256))
-        assert np.array_equal(
-            _ULAW_DEC, np.frombuffer(audioop.ulaw2lin(codes, 2), dtype="<i2")
-        )
-        assert np.array_equal(
-            _ALAW_DEC, np.frombuffer(audioop.alaw2lin(codes, 2), dtype="<i2")
-        )
-
-    def test_encoders_match_audioop_over_full_int16_domain(self):
-        from shopify_etl_spark.operators.wav_codec import _lin2alaw, _lin2ulaw
-
-        x = np.arange(-32768, 32768, dtype=np.int16)
-        raw = x.tobytes()
-        assert np.array_equal(
-            _lin2ulaw(x),
-            np.frombuffer(audioop.lin2ulaw(raw, 2), dtype=np.uint8),
-        )
-        assert np.array_equal(
-            _lin2alaw(x),
-            np.frombuffer(audioop.lin2alaw(raw, 2), dtype=np.uint8),
-        )
-
-    @pytest.mark.parametrize("law", ["ulaw", "alaw"])
-    def test_wav_end_to_end_matches_audioop_pipeline(self, law):
-        from shopify_etl_spark.operators.wav_codec import (
-            decode_wav,
-            encode_wav_g711,
-        )
-
-        rng = np.random.default_rng(3)
-        s = rng.integers(-32768, 32768, (401, 2), dtype=np.int16)
-        arr, rate = decode_wav(encode_wav_g711(s, 8000, law))
-        assert rate == 8000 and arr.shape == (401, 2)
-        enc = getattr(audioop, f"lin2{law}")(
-            np.ascontiguousarray(s).tobytes(), 2
-        )
-        dec = np.frombuffer(
-            getattr(audioop, f"{law}2lin")(enc, 2), dtype="<i2"
-        ).reshape(-1, 2)
-        assert np.array_equal(arr, dec.astype(np.float32) / 32768.0)

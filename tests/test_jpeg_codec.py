@@ -9,7 +9,6 @@ import pytest
 from shopify_etl_spark.operators.jpeg_codec import (
     decode_jpeg,
     encode_jpeg,
-    encode_jpeg_arith,
     encode_jpeg_progressive,
 )
 
@@ -153,14 +152,26 @@ class TestStructure:
             decode_jpeg(bytes(data))
 
     def test_differential_frames_need_dhp(self):
-        """Every differential SOF (5/6/7/13/14/15) decodes since r13 —
-        but only inside a hierarchical stream; a bare differential
-        frame (no DHP) is a clean ValueError for each of them."""
+        """Every Huffman differential SOF (5/6/7) decodes — but only
+        inside a hierarchical stream; a bare differential frame (no DHP)
+        is a clean ValueError for each of them."""
         data = bytearray(encode_jpeg(_test_image(channels=1), quality=85))
         i = bytes(data).index(b"\xff\xc0")
-        for m in (0xC5, 0xC6, 0xC7, 0xCD, 0xCE, 0xCF):
+        for m in (0xC5, 0xC6, 0xC7):
             data[i + 1] = m
             with pytest.raises(ValueError, match="hierarchical"):
+                decode_jpeg(bytes(data))
+
+    def test_unsupported_coding_modes_raise_not_implemented(self):
+        """Arithmetic-coded frame types (SOF9-11, 13-15) and the DAC
+        marker are outside the decoded subset: a baseline stream
+        relabelled as any of them must raise NotImplementedError, never
+        decode its Huffman data as if it were QM-coded."""
+        data = bytearray(encode_jpeg(_test_image(channels=1), quality=85))
+        i = bytes(data).index(b"\xff\xc0")
+        for m in (0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF, 0xCC):
+            data[i + 1] = m
+            with pytest.raises(NotImplementedError, match="not supported"):
                 decode_jpeg(bytes(data))
 
     @pytest.mark.parametrize("channels", [1, 3])
@@ -437,136 +448,6 @@ class Test12BitPrecision:
                 pass
 
 
-class TestArithmeticCoding:
-    """SOF9 sequential arithmetic (T.81 Annex D QM-coder + F.1.4 model).
-
-    The contract mirrors the progressive one: both entropy back ends
-    consume the SAME quantized coefficients from _prepare_frame, so
-    decode(arith stream) must equal decode(Huffman stream) bit-for-bit
-    — a decoder that mis-tracks a context bin, a carry, a stuffed byte
-    or a conditioning category cannot pass."""
-
-    @pytest.mark.parametrize("channels", [1, 3])
-    @pytest.mark.parametrize("quality", [10, 50, 85])
-    def test_arith_decode_matches_huffman_bit_exact(self, channels, quality):
-        img = _test_image(channels=channels)
-        hh = decode_jpeg(encode_jpeg(img, quality=quality))
-        aa = decode_jpeg(encode_jpeg_arith(img, quality=quality))
-        assert np.array_equal(hh, aa)
-
-    def test_arith_420_and_restarts_match_huffman(self):
-        img = _test_image(48, 40, channels=3, seed=3)
-        for kw in ({"subsampling": "420"}, {"restart_interval": 2},
-                   {"subsampling": "420", "restart_interval": 3}):
-            hh = decode_jpeg(encode_jpeg(img, quality=60, **kw))
-            aa = decode_jpeg(encode_jpeg_arith(img, quality=60, **kw))
-            assert np.array_equal(hh, aa), kw
-
-    def test_arith_12bit_matches_huffman(self):
-        rng = np.random.default_rng(5)
-        y, x = np.mgrid[0:24, 0:40]
-        img = np.clip(
-            2048 + 1200 * np.sin(x / 7.0) * np.cos(y / 5.0)
-            + rng.normal(0, 30, (24, 40)),
-            0, 4095,
-        ).astype(np.uint16)
-        hh = decode_jpeg(encode_jpeg(img, precision=12))
-        aa = decode_jpeg(encode_jpeg_arith(img, precision=12))
-        assert np.array_equal(hh, aa)
-
-    def test_arith_stream_is_sof9_no_dht_and_stuffed(self):
-        data = encode_jpeg_arith(_test_image(channels=3), quality=70)
-        assert b"\xff\xc9" in data and b"\xff\xc4" not in data
-        # every 0xFF inside the entropy segment is a stuffed pair or a
-        # legal marker (RSTn / EOI) — same framing rule as Huffman
-        i = data.index(b"\xff\xda")
-        seg = data[i + 2 + struct.unpack(">H", data[i + 2:i + 4])[0]:]
-        j = 0
-        while j < len(seg) - 1:
-            if seg[j] == 0xFF:
-                assert seg[j + 1] == 0x00 or seg[j + 1] in (
-                    *range(0xD0, 0xD8), 0xD9,
-                ), f"unstuffed 0xFF at {j}"
-                j += 2
-                continue
-            j += 1
-
-    def test_arith_typically_smaller_than_huffman(self):
-        """Not a spec guarantee, but the QM-coder's adaptation should
-        beat static Annex-K Huffman tables on natural content — a
-        transcribed-wrong state table would show up here as bloat."""
-        img = _test_image(64, 64, channels=3, seed=11)
-        hs = len(encode_jpeg(img, quality=75))
-        as_ = len(encode_jpeg_arith(img, quality=75))
-        assert as_ < hs
-
-    def test_dac_conditioning_bounds_rejected(self):
-        """DAC segments with out-of-range conditioning must raise the
-        clean ValueError the executor-safety contract promises."""
-        data = bytearray(encode_jpeg_arith(_test_image(channels=1)))
-        i = bytes(data).index(b"\xff\xda")
-        # splice an invalid DAC (Kx = 0) ahead of the SOS
-        bad = b"\xff\xcc" + struct.pack(">H", 4) + bytes([0x10, 0x00])
-        with pytest.raises(ValueError, match="conditioning"):
-            decode_jpeg(bytes(data[:i]) + bad + bytes(data[i:]))
-
-    def test_fuzz_arith_mutations_raise_clean_errors_only(self):
-        """Same executor-safety contract as the Huffman/progressive fuzz:
-        byte-mutated SOF9 streams decode or raise ValueError /
-        NotImplementedError — never a raw IndexError/OverflowError from
-        the coder's registers or the model's bin indices."""
-        import random
-
-        rnd = random.Random(9)
-        img = _test_image(24, 32, channels=3, seed=1)
-        streams = [
-            encode_jpeg_arith(img, quality=60),
-            encode_jpeg_arith(img, quality=60, subsampling="420",
-                              restart_interval=2),
-        ]
-        for _ in range(1200):
-            s = bytearray(rnd.choice(streams))
-            for _ in range(rnd.randint(1, 3)):
-                op = rnd.random()
-                if op < 0.5:
-                    s[rnd.randrange(len(s))] = rnd.randrange(256)
-                elif op < 0.75:
-                    del s[rnd.randrange(len(s))]
-                else:
-                    s.insert(rnd.randrange(len(s)), rnd.randrange(256))
-            try:
-                decode_jpeg(bytes(s))
-            except (ValueError, NotImplementedError):
-                pass
-
-
-class TestArithmeticConditioning:
-    """Non-default DAC conditioning: until r11's tail work, the decoder's
-    L-classification (zero-diff category) and non-5 Kx band split had no
-    fixture generator — encode_jpeg_arith now emits a DAC marker and
-    conditions with the same (L, U, Kx), so every branch round-trips."""
-
-    @pytest.mark.parametrize(
-        "dc_cond,ac_kx",
-        [((1, 3), 1), ((2, 7), 63), ((0, 0), 16), ((4, 4), 8)],
-    )
-    def test_non_default_conditioning_matches_huffman(self, dc_cond, ac_kx):
-        img = _test_image(channels=3, seed=5)
-        base = decode_jpeg(encode_jpeg(img, quality=60))
-        stream = encode_jpeg_arith(
-            img, quality=60, dc_cond=dc_cond, ac_kx=ac_kx
-        )
-        assert b"\xff\xcc" in stream  # the DAC marker is really emitted
-        assert np.array_equal(decode_jpeg(stream), base)
-
-    def test_invalid_conditioning_rejected_at_encode(self):
-        img = _test_image(channels=1)
-        with pytest.raises(ValueError, match="conditioning"):
-            encode_jpeg_arith(img, dc_cond=(3, 1))
-        with pytest.raises(ValueError, match="conditioning"):
-            encode_jpeg_arith(img, ac_kx=0)
-
-
 class TestNonInterleaved:
     """Non-interleaved sequential (one scan per component): until r11's
     tail work a valid multi-scan file was mislabeled 'corrupt' — the
@@ -604,65 +485,6 @@ class TestNonInterleaved:
         with pytest.raises(ValueError, match="interleave"):
             encode_jpeg(img, restart_interval=2, interleave=False)
 
-    @pytest.mark.parametrize("shape", [(40, 56, 3), (13, 21, 3)])
-    @pytest.mark.parametrize("quality", [30, 85])
-    def test_arith_non_interleaved_matches_huffman_bit_exact(
-        self, shape, quality
-    ):
-        """SOF9 + one-scan-per-component (the late-r11 seam, closed r12):
-        same quantized coefficients as the Huffman interleaved stream,
-        so all four (entropy coder × scan layout) paths must decode
-        bit-identically."""
-        rng = np.random.default_rng(sum(shape) + quality + 1)
-        img = rng.integers(0, 256, size=shape, dtype=np.uint8)
-        base = decode_jpeg(encode_jpeg(img, quality=quality))
-        got = decode_jpeg(
-            encode_jpeg_arith(img, quality=quality, interleave=False)
-        )
-        assert np.array_equal(base, got)
-
-    def test_arith_non_interleaved_with_nondefault_conditioning(self):
-        """Non-default DAC conditioning (the other late-r11 feature) must
-        compose with non-interleaved scans — each scan reads the same
-        DAC tables but opens its own coder/statistics."""
-        img = _test_image(24, 40, channels=3, seed=9)
-        base = decode_jpeg(encode_jpeg(img, quality=60))
-        got = decode_jpeg(
-            encode_jpeg_arith(
-                img, quality=60, interleave=False,
-                dc_cond=(1, 2), ac_kx=4,
-            )
-        )
-        assert np.array_equal(base, got)
-
-    def test_arith_stream_really_has_three_scans_and_is_sof9(self):
-        data = encode_jpeg_arith(
-            _test_image(channels=3), quality=70, interleave=False
-        )
-        assert b"\xff\xc9" in data and data.count(b"\xff\xda") == 3
-
-    def test_arith_non_interleaved_unsupported_combinations_rejected(self):
-        img = _test_image(channels=3)
-        with pytest.raises(ValueError, match="interleave"):
-            encode_jpeg_arith(img, subsampling="420", interleave=False)
-        with pytest.raises(ValueError, match="interleave"):
-            encode_jpeg_arith(img, restart_interval=2, interleave=False)
-
-    def test_dac_segment_with_trailing_odd_byte_rejected(self):
-        """A DAC segment whose payload is not a whole number of
-        (Tc/Tb, Cs) pairs must raise the clean ValueError the DQT/DHT
-        parsers raise on bad lengths, not be silently tolerated
-        (ADVICE r11)."""
-        data = bytearray(
-            encode_jpeg_arith(_test_image(channels=1), dc_cond=(1, 2))
-        )
-        i = bytes(data).index(b"\xff\xcc")
-        seg_len = struct.unpack(">H", bytes(data[i + 2:i + 4]))[0]
-        data[i + 2:i + 4] = struct.pack(">H", seg_len + 1)
-        data.insert(i + 2 + seg_len, 0x00)  # trailing odd byte
-        with pytest.raises(ValueError, match="DAC"):
-            decode_jpeg(bytes(data))
-
     def test_fuzz_non_interleaved_clean_errors_only(self):
         import random
 
@@ -670,7 +492,6 @@ class TestNonInterleaved:
         img = _test_image(24, 32, channels=3, seed=2)
         streams = [
             encode_jpeg(img, quality=60, interleave=False),
-            encode_jpeg_arith(img, quality=60, interleave=False),
         ]
         for _ in range(800):
             s = bytearray(rnd.choice(streams))
@@ -859,16 +680,11 @@ class TestLossless:
         img16 = np.random.default_rng(3).integers(
             0, 65536, (12, 14), dtype=np.uint16
         )
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_lossless_arith,
-        )
-
         streams = [
             encode_jpeg_lossless(img, predictor=4),
             encode_jpeg_lossless(img, predictor=7, interleave=False),
             encode_jpeg_lossless(img16, predictor=2),
-            encode_jpeg_lossless_arith(img, predictor=4,
-                                       restart_interval=5),
+            encode_jpeg_lossless(img, predictor=4, restart_interval=5),
         ]
         for _ in range(800):
             s = bytearray(rnd.choice(streams))
@@ -888,9 +704,9 @@ class TestLossless:
 
 class TestWideSubsampling:
     """4:2:2 / 4:1:1 / 4:4:0 layouts (r12): one shared subsampling front
-    half feeds all three entropy back ends, so progressive and
-    arithmetic must decode bit-identically to the Huffman stream on
-    EVERY layout — and decode now accepts foreign factors up to 4."""
+    half feeds both encoders, so progressive must decode bit-identically
+    to the sequential stream on EVERY layout — and decode now accepts
+    foreign factors up to 4."""
 
     @pytest.mark.parametrize("mode", ["422", "411", "440"])
     def test_roundtrip_psnr_and_size(self, mode):
@@ -908,10 +724,7 @@ class TestWideSubsampling:
         prog = decode_jpeg(
             encode_jpeg_progressive(img, quality=70, subsampling=mode)
         )
-        arith = decode_jpeg(
-            encode_jpeg_arith(img, quality=70, subsampling=mode)
-        )
-        assert np.array_equal(prog, base) and np.array_equal(arith, base)
+        assert np.array_equal(prog, base)
 
     @pytest.mark.parametrize("mode", ["422", "411", "440"])
     def test_odd_dims(self, mode):
@@ -950,284 +763,6 @@ class TestWideSubsampling:
             decode_jpeg(bytes(data))
 
 
-class TestProgressiveArithmetic:
-    """SOF10 (r12) — the last JPEG DCT mode: T.81 Annex G scan
-    structure entropy-coded by the Annex D QM-coder with the G.3
-    models. All four DCT encoders share one coefficient front half, so
-    all four decodes must be bit-identical."""
-
-    @pytest.mark.parametrize("channels", [1, 3])
-    @pytest.mark.parametrize("quality", [10, 50, 85])
-    def test_four_way_cross_path_bit_exact(self, channels, quality):
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_arith_progressive,
-        )
-
-        img = _test_image(channels=channels, seed=7)
-        base = decode_jpeg(encode_jpeg(img, quality=quality))
-        prog = decode_jpeg(encode_jpeg_progressive(img, quality=quality))
-        seqa = decode_jpeg(encode_jpeg_arith(img, quality=quality))
-        proga = decode_jpeg(
-            encode_jpeg_arith_progressive(img, quality=quality)
-        )
-        assert np.array_equal(base, prog)
-        assert np.array_equal(base, seqa)
-        assert np.array_equal(base, proga)
-
-    @pytest.mark.parametrize("mode", ["420", "422", "411", "440"])
-    def test_subsampled_matches_baseline(self, mode):
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_arith_progressive,
-        )
-
-        rng = np.random.default_rng(len(mode) + 17)
-        img = rng.integers(0, 256, (33, 47, 3), dtype=np.uint8)
-        base = decode_jpeg(encode_jpeg(img, quality=60, subsampling=mode))
-        got = decode_jpeg(
-            encode_jpeg_arith_progressive(img, quality=60, subsampling=mode)
-        )
-        assert np.array_equal(base, got)
-
-    @pytest.mark.parametrize("shape", [(8, 8), (17, 23), (7, 9), (33, 31)])
-    def test_odd_dims_noise_content(self, shape):
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_arith_progressive,
-        )
-
-        rng = np.random.default_rng(sum(shape))
-        img = rng.integers(0, 256, (*shape, 3), dtype=np.uint8)
-        base = decode_jpeg(encode_jpeg(img, quality=30))
-        got = decode_jpeg(encode_jpeg_arith_progressive(img, quality=30))
-        assert np.array_equal(base, got)
-
-    def test_stream_structure_and_adaptation_wins(self):
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_arith_progressive,
-        )
-
-        img = _test_image(channels=3)
-        data = encode_jpeg_arith_progressive(img, quality=85)
-        assert b"\xff\xca" in data and b"\xff\xc4" not in data  # no DHT
-        # the color script: 1 DC-first + 2x3 AC-first (spectral halves)
-        # + 2x3 AC-refine + 1 DC-refine = 14 scans
-        assert data.count(b"\xff\xda") == 14
-        # the adaptive coder must beat the static Annex-K Huffman tables
-        assert len(data) < len(encode_jpeg_progressive(img, quality=85))
-
-    @pytest.mark.parametrize("channels", [1, 3])
-    @pytest.mark.parametrize("interval", [1, 2, 3])
-    def test_restart_intervals_bit_exact(self, channels, interval):
-        """SOF10 + DRI (the r12 seam, closed r13): every scan resets
-        coder + statistics + DC state at each RSTn (T.81 E.2.4), so the
-        decode must STILL equal the baseline decode bit-for-bit — the
-        coefficients are unchanged, only the entropy segmentation moved.
-        The cross-path gate run on restart-bearing streams is the
-        strongest pin available: one missed reset desynchronizes the QM
-        decoder and scrambles whole segments."""
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_arith_progressive,
-        )
-
-        img = _test_image(channels=channels, seed=interval)
-        data = encode_jpeg_arith_progressive(
-            img, quality=60, restart_interval=interval
-        )
-        assert b"\xff\xdd" in data  # DRI emitted
-        assert any(bytes([0xFF, 0xD0 + n]) in data for n in range(8))
-        base = decode_jpeg(encode_jpeg(img, quality=60))
-        assert np.array_equal(base, decode_jpeg(data))
-        # and the no-restart SOF10 stream decodes identically too
-        no_rst = encode_jpeg_arith_progressive(img, quality=60)
-        assert np.array_equal(base, decode_jpeg(no_rst))
-
-    @pytest.mark.parametrize("mode", ["420", "422"])
-    def test_restart_with_subsampling_bit_exact(self, mode):
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_arith_progressive,
-        )
-
-        rng = np.random.default_rng(41 + len(mode))
-        img = rng.integers(0, 256, (19, 29, 3), dtype=np.uint8)
-        base = decode_jpeg(encode_jpeg(img, quality=50, subsampling=mode))
-        got = decode_jpeg(encode_jpeg_arith_progressive(
-            img, quality=50, subsampling=mode, restart_interval=2
-        ))
-        assert np.array_equal(base, got)
-
-    def test_missing_restart_segment_raises(self):
-        """Deleting an RSTn pair merges two segments — the decoder must
-        notice the shortfall and raise cleanly, not desync silently."""
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_arith_progressive,
-        )
-
-        data = bytearray(encode_jpeg_arith_progressive(
-            _test_image(channels=1), restart_interval=1
-        ))
-        for n in range(8):
-            i = bytes(data).find(bytes([0xFF, 0xD0 + n]))
-            if i >= 0:
-                del data[i:i + 2]
-                break
-        else:  # pragma: no cover - restart markers must exist
-            raise AssertionError("no RST marker found")
-        with pytest.raises(ValueError):
-            decode_jpeg(bytes(data), max_pixels=1_000_000)
-
-    def test_fuzz_prog_arith_clean_errors_only(self):
-        import random
-
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_arith_progressive,
-        )
-
-        rnd = random.Random(31)
-        img = _test_image(24, 32, channels=3, seed=4)
-        streams = [
-            encode_jpeg_arith_progressive(img, quality=60),
-            encode_jpeg_arith_progressive(img, quality=60,
-                                          subsampling="420"),
-        ]
-        for _ in range(800):
-            s = bytearray(rnd.choice(streams))
-            for _ in range(rnd.randint(1, 3)):
-                op = rnd.random()
-                if op < 0.5:
-                    s[rnd.randrange(len(s))] = rnd.randrange(256)
-                elif op < 0.75:
-                    del s[rnd.randrange(len(s))]
-                else:
-                    s.insert(rnd.randrange(len(s)), rnd.randrange(256))
-            try:
-                decode_jpeg(bytes(s), max_pixels=1_000_000)
-            except (ValueError, NotImplementedError):
-                pass
-
-
-class TestArithLossless:
-    """Arithmetic lossless mode (SOF11, T.81 Annex H + the Annex D
-    QM-coder — r13): the SOF3 exact contract with the H.1.2 conditioned
-    difference model (25 Da/Db contexts, dual magnitude bin sets)."""
-
-    @pytest.mark.parametrize("predictor", range(1, 8))
-    def test_exact_roundtrip_gray(self, predictor):
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_lossless_arith,
-        )
-
-        rng = np.random.default_rng(predictor * 37)
-        img = rng.integers(0, 256, (13, 17), dtype=np.uint8)
-        got = decode_jpeg(
-            encode_jpeg_lossless_arith(img, predictor=predictor)
-        )
-        assert got.dtype == np.uint8 and np.array_equal(got, img)
-
-    @pytest.mark.parametrize("interleave", [True, False])
-    def test_exact_roundtrip_rgb(self, interleave):
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_lossless_arith,
-        )
-
-        rng = np.random.default_rng(int(interleave))
-        img = rng.integers(0, 256, (9, 11, 3), dtype=np.uint8)
-        got = decode_jpeg(
-            encode_jpeg_lossless_arith(img, interleave=interleave)
-        )
-        assert np.array_equal(got, img)
-
-    def test_exact_roundtrip_16bit_extremes(self):
-        """Alternating 0/65535 forces the 14-bit magnitude-tree depth
-        (|diff| up to 32768) through BOTH X/M bin sets — the previous
-        diff is always large-class, so the second set carries the row
-        interior."""
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_lossless_arith,
-        )
-
-        img = np.zeros((4, 8), dtype=np.uint16)
-        img[:, 1::2] = 65535
-        got = decode_jpeg(encode_jpeg_lossless_arith(img, predictor=1))
-        assert got.dtype == np.uint16 and np.array_equal(got, img)
-
-    @pytest.mark.parametrize("restart", [1, 5, 13])
-    def test_restart_intervals_reset_everything(self, restart):
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_lossless_arith,
-        )
-
-        rng = np.random.default_rng(restart)
-        img = rng.integers(0, 256, (12, 7), dtype=np.uint8)
-        got = decode_jpeg(
-            encode_jpeg_lossless_arith(img, restart_interval=restart)
-        )
-        assert np.array_equal(got, img)
-
-    def test_nondefault_conditioning_roundtrip(self):
-        """DAC (L, U) = (2, 5) moves the zero/small/large classification
-        thresholds — encoder and decoder must agree on the new bins."""
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_lossless_arith,
-        )
-
-        rng = np.random.default_rng(99)
-        img = rng.integers(0, 256, (10, 10), dtype=np.uint8)
-        got = decode_jpeg(
-            encode_jpeg_lossless_arith(img, dc_cond=(2, 5))
-        )
-        assert np.array_equal(got, img)
-
-    def test_point_transform_near_lossless(self):
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_lossless_arith,
-        )
-
-        rng = np.random.default_rng(3)
-        img = rng.integers(0, 256, (8, 9), dtype=np.uint8)
-        got = decode_jpeg(
-            encode_jpeg_lossless_arith(img, point_transform=3)
-        )
-        assert np.array_equal(got, (img >> 3) << 3)
-
-    def test_adaptation_beats_huffman_on_smooth_content(self):
-        """The point of the QM coder: on a smooth ramp (tiny diffs,
-        heavily skewed bins) the adaptive coder must beat the static
-        SSSS Huffman alphabet by a wide margin."""
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_lossless,
-            encode_jpeg_lossless_arith,
-        )
-
-        ramp = np.add.outer(np.arange(32), np.arange(32)).astype(np.uint8)
-        a = encode_jpeg_lossless_arith(ramp)
-        hf = encode_jpeg_lossless(ramp)
-        assert np.array_equal(decode_jpeg(a), ramp)
-        assert len(a) < len(hf) / 2
-
-    def test_agrees_with_huffman_path(self):
-        """Cross-path: SOF3 and SOF11 decodes of the same raster agree
-        bit-for-bit (both exact, but this pins the two scan decoders
-        against each other on identical prediction geometry)."""
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_lossless,
-            encode_jpeg_lossless_arith,
-        )
-
-        rng = np.random.default_rng(11)
-        img = rng.integers(0, 65536, (7, 9, 3), dtype=np.uint16)
-        a = decode_jpeg(encode_jpeg_lossless_arith(img, predictor=6))
-        hf = decode_jpeg(encode_jpeg_lossless(img, predictor=6))
-        assert np.array_equal(a, hf) and np.array_equal(a, img)
-
-    def test_invalid_conditioning_rejected(self):
-        from shopify_etl_spark.operators.jpeg_codec import (
-            encode_jpeg_lossless_arith,
-        )
-
-        img = np.zeros((4, 4), dtype=np.uint8)
-        with pytest.raises(ValueError, match="conditioning"):
-            encode_jpeg_lossless_arith(img, dc_cond=(5, 2))
-
-
 class TestHierarchical:
     """Hierarchical progression (T.81 Annex J — r13): DHP + EXP + a
     non-differential base frame + differential lossless refinements.
@@ -1245,18 +780,14 @@ class TestHierarchical:
         got = decode_jpeg(encode_jpeg_hierarchical(img, levels=levels))
         assert got.dtype == np.uint8 and np.array_equal(got, img)
 
-    @pytest.mark.parametrize("base", ["lossless", "lossless_arith"])
-    @pytest.mark.parametrize("arith", [False, True])
-    def test_exact_roundtrip_rgb_all_entropy_mixes(self, base, arith):
+    def test_exact_roundtrip_rgb(self):
         from shopify_etl_spark.operators.jpeg_codec import (
             encode_jpeg_hierarchical,
         )
 
-        rng = np.random.default_rng(hash((base, arith)) % 1000)
+        rng = np.random.default_rng(11)
         img = rng.integers(0, 256, (11, 14, 3), dtype=np.uint8)
-        got = decode_jpeg(
-            encode_jpeg_hierarchical(img, levels=3, base=base, arith=arith)
-        )
+        got = decode_jpeg(encode_jpeg_hierarchical(img, levels=3))
         assert np.array_equal(got, img)
 
     def test_lossy_base_exact_after_refinement(self):
@@ -1376,23 +907,20 @@ class TestHierarchical:
 
 
 class TestDifferentialDct:
-    """Differential sequential-DCT refinement frames (SOF5/SOF13 —
+    """Differential sequential-DCT refinement frames (SOF5 —
     Annex J's lossy rung): IDCT output is the signed residual (no level
     shift), DC coded with ZERO prediction, mod-2^16 combine; the finest
     lossless rung keeps the overall round trip exact."""
 
-    @pytest.mark.parametrize("arith", [False, True])
-    def test_exact_with_lossless_final_rung(self, arith):
+    def test_exact_with_lossless_final_rung(self):
         from shopify_etl_spark.operators.jpeg_codec import (
             encode_jpeg_hierarchical,
         )
 
-        rng = np.random.default_rng(int(arith))
+        rng = np.random.default_rng(0)
         img = rng.integers(0, 256, (24, 20), dtype=np.uint8)
         got = decode_jpeg(
-            encode_jpeg_hierarchical(
-                img, levels=3, dct_refine=True, arith=arith
-            )
+            encode_jpeg_hierarchical(img, levels=3, dct_refine=True)
         )
         assert np.array_equal(got, img)
 
@@ -1406,14 +934,12 @@ class TestDifferentialDct:
 
         rng = np.random.default_rng(30)
         img = rng.integers(0, 256, (33, 17), dtype=np.uint8)
-        for arith in (False, True):
-            got = decode_jpeg(
-                encode_jpeg_hierarchical(
-                    img, levels=4, dct_refine=True, quality=30,
-                    arith=arith,
-                )
+        got = decode_jpeg(
+            encode_jpeg_hierarchical(
+                img, levels=4, dct_refine=True, quality=30,
             )
-            assert np.array_equal(got, img)
+        )
+        assert np.array_equal(got, img)
 
     def test_dct_rung_actually_lossy(self):
         """Control: decode a stream TRUNCATED after the DCT rung (strip
@@ -1442,21 +968,20 @@ class TestDifferentialDct:
         with _pytest.raises(ValueError, match="dimensions"):
             decode_jpeg(truncated)
 
-    @pytest.mark.parametrize("arith", [False, True])
-    def test_differential_progressive_exact(self, arith):
-        """SOF6/SOF14 rungs (spectral-selection script: zero-prediction
+    def test_differential_progressive_exact(self):
+        """SOF6 rungs (spectral-selection script: zero-prediction
         DC scan + AC bands 1-5 / 6-63) — exact overall with the final
-        lossless rung, closing the LAST T.81 frame-type seam."""
+        lossless rung."""
         from shopify_etl_spark.operators.jpeg_codec import (
             encode_jpeg_hierarchical,
         )
 
-        rng = np.random.default_rng(14 + int(arith))
+        rng = np.random.default_rng(14)
         img = rng.integers(0, 256, (33, 17), dtype=np.uint8)
         got = decode_jpeg(
             encode_jpeg_hierarchical(
                 img, levels=4, dct_refine=True, dct_mode="prog",
-                quality=40, arith=arith,
+                quality=40,
             )
         )
         assert np.array_equal(got, img)

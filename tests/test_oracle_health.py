@@ -20,7 +20,7 @@ import __spark_entry__ as entrymod
 from shopify_etl_spark.plans.catalog import TABLES
 
 SF_DIR = "/root/testdata/sf0.001"
-# generous per-oracle ceiling: the whole 200-oracle sweep runs ~13 s on
+# generous per-oracle ceiling: the whole 190-oracle sweep runs ~13 s on
 # 4 vCPU, no oracle over ~1 s; anything near the ceiling is already
 # pathological at this SF
 MAX_SECS = 8.0

@@ -185,7 +185,6 @@ EXPECT = {
     # any Exchange here means the audio pipeline stopped being a map
     "audio_demux_stats": dict(max_shuffles=0, max_smj=0, max_scan_width=1),
     "image_decode_stats": dict(max_shuffles=0, max_smj=0, max_scan_width=1),
-    "jpeg_roundtrip_stats": dict(max_shuffles=0, max_smj=0, max_scan_width=1),
     # fusion of two bounded top-k lists: the query-side postings/sizes are
     # broadcast (floor pinned); corpus-sized joins stay SMJ'd on 8-byte keys
     "hybrid_rrf_topk": dict(max_shuffles=10, min_bhj=2, max_smj=2),
@@ -478,9 +477,9 @@ def gate_spark(spark):
 # catalog query for the WHOLE suite — the r17 gate rebuilt each builder
 # per test (~680 invocations across this module's parametrized tests and
 # three whole-catalog loops), which blew the driver's verify budget
-# (VERIFY_r17: pytest truncated at 81%). Every check below is a pure
-# function of the formatted plan string, so the shared cache feeds them
-# all — identical audit surface.
+# (VERIFY_r17, at 1814ba1 in git history: pytest truncated at 81%).
+# Every check below is a pure function of the formatted plan string, so
+# the shared cache feeds them all — identical audit surface.
 
 
 @pytest.mark.parametrize("name", sorted(EXPECT))

@@ -30,7 +30,12 @@ def first_sentence(doc: str, limit: int = 110) -> str:
 
 
 def main() -> int:
-    spark = get_spark("catalog-report", master="local[8]", shuffle_partitions=8)
+    # no console progress bar: its stage lines on stderr would land
+    # mid-line in a log that also captures stdout
+    spark = get_spark(
+        "catalog-report", master="local[8]", shuffle_partitions=8,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.maxMetadataStringLength", "4000")
 

@@ -65,7 +65,12 @@ def main() -> int:
             continue
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
 
-    spark = get_spark("correctness-check", master="local[8]", shuffle_partitions=8)
+    # no console progress bar: its stage lines on stderr would land
+    # mid-line in a log that also captures stdout
+    spark = get_spark(
+        "correctness-check", master="local[8]", shuffle_partitions=8,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     spark.sparkContext.setLogLevel("ERROR")
 
     queries = entrymod.queries()

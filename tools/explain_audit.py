@@ -21,7 +21,12 @@ from shopify_etl_spark.session import get_spark  # noqa: E402
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("explain-audit", master="local[8]", shuffle_partitions=8)
+    # no console progress bar: its stage lines on stderr would land
+    # mid-line in a log that also captures stdout
+    spark = get_spark(
+        "explain-audit", master="local[8]", shuffle_partitions=8,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     spark.sparkContext.setLogLevel("ERROR")
 
     for name, spec in QUERIES.items():
