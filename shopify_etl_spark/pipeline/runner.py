@@ -1,4 +1,4 @@
-"""Two-phase pipeline runner: parallel staging → barrier → serial merge.
+"""Two-phase pipeline runner: parallel staging → barrier → concurrent merges.
 
 Spark twin of the reference's daily job (reference daily_scheduler.py:
 100-216, O1-O5 in SURVEY.md §2.12):
@@ -12,12 +12,20 @@ Spark twin of the reference's daily job (reference daily_scheduler.py:
 * **Barrier** — the run log's buffered rows land as one file; any staging
   failure, or a failed run-log write, skips the merge phase
   (daily_scheduler.py:168-172). Raw files archive only after that write.
-* **Phase 2** — serial merges per entity with a 2-attempt retry
+* **Phase 2** — one merge per staged entity with a 2-attempt retry
   (run_etl_with_retries.py; 'attempt 1/2' markers at run_logs.txt:239).
   Full refresh for dims, upsert for orders/inventory, delete+reload for
   order items, keyed snapshot append. Staging tables are read with the
   schema their flatteners declare, and each merge input with more than
   one consumer is computed once (a local checkpoint).
+
+  Divergence from the reference, which merges the entities one after
+  another: here the merges run concurrently, one thread and one FAIR
+  scheduler pool per entity, as staging does. Their order carries no
+  meaning. The entities write disjoint tables and each publishes on its
+  own; the barrier before them and the BI trigger after all of them are
+  unchanged, and the orders merge stays the single writer of the orders
+  pair store.
 
 Single-table warehouse merges are staged to a ``_tmp`` sibling and
 swapped in by ``atomic_overwrite``; the writer puts back a table a crash
@@ -34,6 +42,7 @@ too.
 
 from __future__ import annotations
 
+import threading
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from dataclasses import dataclass
@@ -89,16 +98,35 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, hpath
 
 
+def _fs_write(fs, p, data: bytes) -> None:
+    out = fs.create(p, True)
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+
+
 def fs_write_text(spark: SparkSession, path: str, text: str) -> None:
     """Write a small text file via the Hadoop FS API (scheme-agnostic —
     markers, manifests, bindings). Overwrites; callers needing an atomic
     publish write to a sibling and rename."""
     fs, p = _hadoop_fs(spark, path)
-    out = fs.create(p, True)
+    _fs_write(fs, p, text.encode("utf-8"))
+
+
+def fs_publish(spark: SparkSession, path: str, data: bytes) -> None:
+    """Land a small file atomically via the Hadoop FS API: write it under
+    a hidden ``.``-prefixed sibling, which Spark's readers skip, then
+    rename it to ``path``."""
+    fs, final = _hadoop_fs(spark, path)
+    tmp = spark._jvm.org.apache.hadoop.fs.Path(final.getParent(), f".{final.getName()}")
     try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
+        _fs_write(fs, tmp, data)
+        if not fs.rename(tmp, final):
+            raise IOError(f"fs_publish: failed to rename {tmp} to {path}")
+    except Exception:
+        fs.delete(tmp, False)
+        raise
 
 
 def fs_read_text(spark: SparkSession, path: str) -> str | None:
@@ -255,18 +283,21 @@ def _staging_frames(nodes: DataFrame, store: str, entity: str) -> dict[str, Data
 
 
 _STAGING_SCHEMAS: dict[str, StructType] = {}
+_STAGING_SCHEMAS_LOCK = threading.Lock()
 
 
 def staging_schema(spark: SparkSession, entity: str, table: str) -> StructType:
     """A staging table's schema as its flattener declares it at plan time
     (the flattener over an empty node frame — no job), so merges read
     staging without a schema-inference job. Memoized: it depends only on
-    the code."""
-    if table not in _STAGING_SCHEMAS:
-        empty = spark.createDataFrame([], StructType([StructField("node", NODE_SCHEMAS[entity])]))
-        for t, df in _staging_frames(empty, "retail", entity).items():
-            _STAGING_SCHEMAS[t] = df.schema
-    return _STAGING_SCHEMAS[table]
+    the code. The concurrent merge threads share the memo, so it fills
+    under a lock."""
+    with _STAGING_SCHEMAS_LOCK:
+        if table not in _STAGING_SCHEMAS:
+            empty = spark.createDataFrame([], StructType([StructField("node", NODE_SCHEMAS[entity])]))
+            for t, df in _staging_frames(empty, "retail", entity).items():
+                _STAGING_SCHEMAS[t] = df.schema
+        return _STAGING_SCHEMAS[table]
 
 
 def _stage_one(spark: SparkSession, cfg: PipelineConfig, runlog: RunLog, store: str, entity: str):
@@ -339,7 +370,9 @@ def computed_once():
 
 
 def _merge_entity(spark: SparkSession, cfg: PipelineConfig, entity: str, ingest_ts) -> None:
-    """Serial merge for one entity (reference run_entity_merge)."""
+    """One attempt at one entity's merge (reference run_entity_merge). It
+    writes only its own entity's tables, so it runs beside the other
+    entities' merges."""
     wh = cfg.warehouse_dir
     stores = list(cfg.stores)
 
@@ -480,8 +513,23 @@ def _merge_entity(spark: SparkSession, cfg: PipelineConfig, entity: str, ingest_
             ])
 
 
+def _merge_with_retries(spark: SparkSession, cfg: PipelineConfig, entity: str, ingest_ts):
+    """One merge thread: ``cfg.retries`` attempts at ``_merge_entity`` in
+    the entity's own scheduler pool. Returns (committed, last error)."""
+    spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"merge-{entity}")
+    err = None
+    for _attempt in range(cfg.retries):
+        try:
+            _merge_entity(spark, cfg, entity, ingest_ts)
+            return True, None
+        except Exception as e:  # noqa: BLE001
+            err = e
+    return False, err
+
+
 def run_daily(spark: SparkSession, cfg: PipelineConfig, ingest_ts=None) -> dict:
-    """Full daily run: parallel staging → barrier → serial merge+retries.
+    """Full daily run: parallel staging → barrier → concurrent per-entity
+    merges, each with its own retries.
 
     Returns {'staging': {(store, entity): bool}, 'merge': {entity: bool}},
     plus 'errors' when a merge or the run-log write failed.
@@ -531,20 +579,21 @@ def run_daily(spark: SparkSession, cfg: PipelineConfig, ingest_ts=None) -> dict:
         return results
 
     # merge only entities that actually staged this run — a partial config
-    # (orders-only) must not attempt customer/product merges over nothing
+    # (orders-only) must not attempt customer/product merges over nothing.
+    # The entities write disjoint tables and each publishes on its own, so
+    # they merge concurrently, one thread each.
     staged_entities = [e for e in ENTITIES if any(ent == e for (_s, ent) in tasks)]
-    for entity in staged_entities:
-        ok, err = False, None
-        for _attempt in range(cfg.retries):
-            try:
-                _merge_entity(spark, cfg, entity, ingest_ts)
-                ok = True
-                break
-            except Exception as e:  # noqa: BLE001
-                err = e
-        results["merge"][entity] = ok
-        if not ok and err is not None:
-            results.setdefault("errors", {})[entity] = str(err)
+    if staged_entities:
+        with ThreadPoolExecutor(max_workers=min(len(staged_entities), cfg.max_workers)) as pool:
+            futures = {
+                e: pool.submit(_merge_with_retries, spark, cfg, e, ingest_ts)
+                for e in staged_entities
+            }
+            for entity, f in futures.items():
+                ok, err = f.result()
+                results["merge"][entity] = ok
+                if not ok and err is not None:
+                    results.setdefault("errors", {})[entity] = str(err)
 
     # O7: kick the BI refresh only when every merge committed (the
     # reference's scheduler runs trigger_pbi after the pipeline). The

@@ -40,8 +40,10 @@ contract as ``atomic_overwrite`` (and Iceberg without a catalog lock).
 from __future__ import annotations
 
 import json
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # Spark/Hive's null dir name
 # How many committed versions stay readable: current + one back, enough
@@ -173,8 +175,9 @@ class PairStore:
         current rows of ONLY the partitions the staged batch touches
         (the partition-scoped merge) and returns the new state of those
         partitions. ``staged_df`` must carry ``partition_col`` and have
-        the table's schema; it is read twice (touched partitions, then
-        the write), so callers pass it materialized.
+        the table's schema; it is read twice (one collect finds the
+        touched partitions of every table, then the write), so callers
+        pass it materialized.
 
         Crash contract: every write before the final rename lands in
         fresh generation dirs no committed manifest references — a crash
@@ -189,12 +192,7 @@ class PairStore:
         man = self.manifest()
         new_tables = {t: dict(m) for t, m in man["tables"].items()}
 
-        for table, staged, merge_fn in updates:
-            touched_vals = [
-                r[0]
-                for r in staged.select(self.partition_col).distinct().collect()
-            ]
-            touched = {_encode_partition(v) for v in touched_vals}
+        for (table, staged, merge_fn), touched in zip(updates, self._touched(updates)):
             current = man["tables"].get(table) or {}
             existing = self._read(
                 table,
@@ -229,6 +227,18 @@ class PairStore:
 
             print(f"PairStore gc warning ({self.root}): {e}", file=sys.stderr)
         return new_version
+
+    def _touched(self, updates: list) -> list[set]:
+        """Each update's touched partitions, encoded, from ONE collect over
+        the staged frames tagged by their position in ``updates``."""
+        tagged = [
+            staged.select(F.lit(i).alias("i"), F.col(self.partition_col).alias("p"))
+            for i, (_table, staged, _merge_fn) in enumerate(updates)
+        ]
+        out = [set() for _ in updates]
+        for r in reduce(DataFrame.unionAll, tagged).distinct().collect():
+            out[r.i].add(_encode_partition(r.p))
+        return out
 
     def _publish(self, manifest: dict, version: int) -> None:
         from .runner import fs_write_text

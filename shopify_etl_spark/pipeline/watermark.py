@@ -9,10 +9,10 @@ merges absorb (the reference's late-data model, SURVEY.md §2.10).
 
 Storage is an append-only parquet directory. Rows buffer on the driver
 and ``flush`` writes them as ONE file per run (``run_daily`` flushes at
-the staging barrier), atomically through Spark's commit protocol; reads
-flush first, then aggregate over every file. Unlike the reference, the
-watermark is a real timestamp, not a lexicographically-compared string
-(SURVEY §1.2 trap).
+the staging barrier), serialized by Arrow and published by a rename, so
+the barrier runs no Spark job; reads flush first, then aggregate over
+every file. Unlike the reference, the watermark is a real timestamp, not
+a lexicographically-compared string (SURVEY §1.2 trap).
 """
 
 from __future__ import annotations
@@ -54,9 +54,7 @@ class RunLog:
         self.path = path
         self._rows: list[dict] = []
         # Staging threads log concurrently into the shared buffer. The
-        # lock also serializes flushes: concurrent append jobs to one
-        # parquet path share the committer's _temporary dir and clobber
-        # each other.
+        # lock also serializes flushes, so no row is written twice.
         self._lock = threading.Lock()
 
     def _append(self, row: dict) -> None:
@@ -70,18 +68,39 @@ class RunLog:
             self._rows.append({**defaults, **row})
 
     def flush(self) -> None:
-        """Write the buffered rows as one parquet file. The pandas frame
-        goes through Arrow, far cheaper than the row-list path for a
-        driver-side batch. Rows stay buffered if the write fails."""
+        """Write the buffered rows as one parquet file, with no Spark job:
+        Arrow serializes them on the driver in the schema Spark writes,
+        and ``fs_publish`` lands the bytes atomically. Rows stay buffered
+        if the write fails."""
         import pandas as pd
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from .runner import fs_publish
 
         with self._lock:
             if not self._rows:
                 return
             rows = pd.DataFrame(self._rows, columns=RUN_LOG_SCHEMA.names)
-            self.spark.createDataFrame(rows, RUN_LOG_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(self.path)
+            # naive timestamps are session-local, as createDataFrame reads them
+            tz = self.spark.conf.get("spark.sql.session.timeZone")
+            for f in RUN_LOG_SCHEMA.fields:
+                if isinstance(f.dataType, TimestampType):
+                    rows[f.name] = (
+                        pd.to_datetime(rows[f.name])
+                        .dt.tz_localize(tz, ambiguous=False)
+                        .dt.tz_convert("UTC")
+                    )
+            table = pa.Table.from_pandas(
+                rows, schema=to_arrow_schema(RUN_LOG_SCHEMA), preserve_index=False
+            )
+            buf = pa.BufferOutputStream()
+            pq.write_table(table, buf)
+            fs_publish(
+                self.spark, f"{self.path}/part-{uuid.uuid4().hex}.parquet",
+                buf.getvalue().to_pybytes(),
+            )
             self._rows.clear()
 
     def read(self):
